@@ -12,18 +12,35 @@ import math
 MIN_BEYOND = 10
 
 
-def percentile(values: list[float], pct: float) -> float:
-    """Nearest-rank percentile (``pct`` in 0..100) of a non-empty list."""
+def percentile(values: list[float], pct: float, steps: int = 64) -> float:
+    """Harrell-Davis estimate of the ``pct`` percentile (0 < pct < 100) of
+    a non-empty list: every order statistic weighted by the probability
+    that a Beta(p (n + 1), (1 - p) (n + 1)) variable falls in its share of
+    [0, 1].  A run pools a few dozen latencies of a fixed set of op kinds,
+    so any single order statistic jumps from one op kind to the next
+    between runs; the weighted estimate moves smoothly."""
     if not values:
         raise ValueError("percentile of no samples")
+    if not 0.0 < pct < 100.0:
+        raise ValueError(f"percentile {pct} outside (0, 100)")
     ordered = sorted(values)
-    rank = max(1, math.ceil(pct / 100.0 * len(ordered)))
-    return ordered[rank - 1]
+    n = len(ordered)
+    a, b = pct / 100.0 * (n + 1), (1.0 - pct / 100.0) * (n + 1)
+    log_beta = math.lgamma(a) + math.lgamma(b) - math.lgamma(a + b)
+
+    def density(x: float) -> float:
+        return math.exp((a - 1) * math.log(x) + (b - 1) * math.log1p(-x) - log_beta)
+
+    # midpoint rule on each order statistic's interval [i/n, (i+1)/n]
+    h = 1.0 / (n * steps)
+    weights = [sum(density((i * steps + k + 0.5) * h) for k in range(steps)) * h
+               for i in range(n)]
+    return sum(w * v for w, v in zip(weights, ordered)) / sum(weights)
 
 
 def samples_beyond(n: int, pct: float) -> int:
     """How many of ``n`` samples rank strictly above the nearest-rank
-    ``pct`` percentile."""
+    position of the ``pct`` percentile."""
     return n - max(1, math.ceil(pct / 100.0 * n))
 
 

@@ -6,13 +6,16 @@ Run from the repository root.  The benchmark generates its inputs under
 ``.perfbench_data/`` (once per checkout; the first run also materializes
 the derived schemas), pins the deployment (``SPARK_GRAFT_CPUS`` = nproc,
 the JVM heap, local dirs inside the checkout, the checkout on the
-Python workers' path), sets up the workload three times and reports the
-median set-up, runs one untimed warm-up pass, then measures whole passes
-of the workload's ops for at least ``--seconds`` and at least the
-workload's minimum pass count.  Every op is checked against DuckDB outside
-the timed window; an op that raised or failed the check counts in
-``failed``.  The seed orders every pass and draws the write-op
-parameters; the generated tables do not depend on it.
+Python workers' path), sets the workload up and runs one untimed warm-up
+pass (``setup_s`` is the time from process start to the first timed op,
+less input generation), then measures whole passes of the workload's ops
+for at least ``--seconds`` and at least the workload's minimum pass count.
+Every timed op is checked against DuckDB after the window: the row count
+it observed while it ran, and the op's values (headline: the warm-up run
+of each query; writes: every version an op produced or read).  An op that
+raised or failed the check counts in ``failed``.  The seed orders every
+pass and draws the write-op parameters; the generated tables do not
+depend on it.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` alternates
 untraced and traced passes and prints the per-layer metrics, the layer
@@ -43,7 +46,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "lakehouse_variance_spark"
 DATA_SEED = 42
-SETUPS = 3
 CLOSURE_TOL = 0.05  # build + plan + exec must cover op wall within 5%
 
 
@@ -195,12 +197,12 @@ def stop_spark(spark) -> None:
 def run_window(wl, spark, seconds: float, rng, traced_mode: bool):
     """Whole passes until ``seconds`` have elapsed and the workload's
     minimum pass count is reached.  In traced mode passes alternate
-    untraced / traced, in at least two pairs, so host drift hits both
-    sides alike.  Returns the op samples and per-pass walls."""
+    untraced / traced, in whole pairs, so host drift hits both sides
+    alike.  Returns the op samples and per-pass walls."""
     from tracing import StatusCounts, Tracer, status_attrs
 
     tracer = Tracer(StatusCounts(spark)) if traced_mode else None
-    need = 4 if traced_mode else wl.MIN_PASSES
+    need = 2 if traced_mode else wl.MIN_PASSES
     samples = []  # (pass, traced, op, wall, result-or-exception)
     pass_walls = []  # (traced, wall)
     t_start = time.perf_counter()
@@ -220,7 +222,8 @@ def run_window(wl, spark, seconds: float, rng, traced_mode: bool):
                     wall = span["end"] - span["start"]
                     # counts are read after the op span closes
                     res.update(status_attrs(spark, tracer.counts, res))
-                    span["attrs"].update(res)
+                    span["attrs"].update(
+                        (k, v) for k, v in res.items() if k != "rows")
                 else:
                     res = wl.run(spark, op, rng, None)
                     wall = time.perf_counter() - t0
@@ -272,8 +275,13 @@ def layer_metrics(wl, tracer, samples, pass_walls, extra) -> dict:
     gap = 1.0 - covered / op_wall if op_wall else 0.0
     out["trace.closure_gap_share"] = gap
     out["trace.closure_ok"] = float(abs(gap) <= CLOSURE_TOL)
-    tw = [w for t, w in pass_walls if t]
-    uw = [w for t, w in pass_walls if not t]
+    # tracing overhead: summed op wall of traced against untraced passes
+    # (the status-store reads between traced ops are not counted)
+    op_walls: dict[tuple[int, bool], float] = {}
+    for p, is_traced, _, wall, _ in samples:
+        op_walls[p, is_traced] = op_walls.get((p, is_traced), 0.0) + wall
+    tw = [w for (_, t), w in op_walls.items() if t]
+    uw = [w for (_, t), w in op_walls.items() if not t]
     out["trace.overhead_share"] = statistics.median(tw) / statistics.median(uw) - 1.0
 
     # op groups: summed op wall per traced pass
@@ -321,8 +329,6 @@ def _main(args, work: str) -> int:
     sys.path.insert(0, ROOT)
     data, build_s = ensure_data()
 
-    import duckdb
-
     import metrics as m
     from workloads import WORKLOADS, dir_bytes
 
@@ -331,39 +337,26 @@ def _main(args, work: str) -> int:
               f"choose from {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
 
-    # --- set-up, three times; the first also pays imports and JVM launch
+    # --- set-up: from process start to the first timed op, including the
+    # imports, the JVM launch and the untimed warm-up pass
     from lakehouse_variance_spark import registry
     from lakehouse_variance_spark.session import build_session
 
     t0 = time.perf_counter()
     registry.load_all()
-    load_all_s = time.perf_counter() - t0
+    parts = {"registry.load_all_s": time.perf_counter() - t0}
     wl = WORKLOADS[args.workload](data, work)
-    stopped = []  # stopped sessions stay referenced: no id() reuse
-    spark, setups, parts = None, [], []
-    for i in range(SETUPS):
-        t0 = T_PROCESS if i == 0 else time.perf_counter()
-        if spark is not None:
-            spark.stop()
-            stopped.append(spark)
-        ts = time.perf_counter()
-        spark = build_session(app_name="perfbench", extra_conf=session_conf(work))
-        spark.sparkContext.setLogLevel("ERROR")
-        part = {"session.build_s": time.perf_counter() - ts, **wl.setup(spark)}
-        setups.append(time.perf_counter() - t0)
-        parts.append(part)
-    phases = {"setup": time.perf_counter() - T_PROCESS}
-
-    duck = duckdb.connect(config={
-        "threads": deploy["nproc"], "memory_limit": "1GB",
-        "temp_directory": os.path.join(work, "duck"),
-    })
-    from scripts.canon import register_views
-
-    register_views(duck, data)
     t0 = time.perf_counter()
-    wl.warm(spark, duck)
-    phases["warm"] = time.perf_counter() - t0
+    spark = build_session(app_name="perfbench", extra_conf=session_conf(work))
+    spark.sparkContext.setLogLevel("ERROR")
+    parts["session.build_s"] = time.perf_counter() - t0
+    parts.update(wl.setup(spark))
+    t0 = time.perf_counter()
+    wl.warm(spark)
+    parts["warm_s"] = time.perf_counter() - t0
+    # the first run in a checkout also generates the inputs: not set-up
+    setup_s = time.perf_counter() - T_PROCESS - build_s
+    phases = {"setup": setup_s}
 
     rng = random.Random(args.seed)
     probe_before = cpu_probe()
@@ -373,7 +366,16 @@ def _main(args, work: str) -> int:
     phases["window"] = window_s
 
     # --- correctness gate, outside the window
+    import duckdb
+
+    from scripts.canon import register_views
+
     t0 = time.perf_counter()
+    duck = duckdb.connect(config={
+        "threads": deploy["nproc"], "memory_limit": "1GB",
+        "temp_directory": os.path.join(work, "duck"),
+    })
+    register_views(duck, data)
     ok_ops = [s for s in samples if not isinstance(s[4], Exception)]
     raised = len(samples) - len(ok_ops)
     verdicts = wl.gate(spark, duck, [(s[2], s[4]) for s in ok_ops])
@@ -399,7 +401,7 @@ def _main(args, work: str) -> int:
         "data_dir": os.path.relpath(data, ROOT), "data_build_s": build_s,
         "input_bytes": dir_bytes(data), "derived_bytes": derived_bytes(data),
         "cpu_probe_s": {"before": probe_before, "after": probe_after},
-        "setups_s": setups, "setup_parts": parts, "phases": phases,
+        "setup_parts": parts, "phases": phases,
         "passes": len(pass_walls), "pass_walls": pass_walls,
         "attempted": attempted, "raised": raised, "gate_failed": gate_failed,
         "error_rate": error_rate, "peak_rss_mb": peak_rss_mb,
@@ -411,14 +413,13 @@ def _main(args, work: str) -> int:
           f"input={record['input_bytes']}B derived={record['derived_bytes']}B "
           f"cpu_probe={probe_before:.3f}/{probe_after:.3f}s")
     print(f"# {attempted} ops in {len(pass_walls)} passes, {window_s:.1f}s window; "
-          f"setups {[round(s, 2) for s in setups]}; phases "
+          f"phases "
           f"{ {k: round(v, 1) for k, v in phases.items()} }")
     print(f"# error_rate {error_rate:.4f} ratio ({raised} raised + {gate_failed} "
           f"failed the gate, of {attempted}); peak_rss_mb {peak_rss_mb:.0f} MB")
 
     if args.trace:
-        values = {k: statistics.median(p[k] for p in parts) for k in parts[0]}
-        values["registry.load_all_s"] = load_all_s
+        values = {k: v for k, v in parts.items() if k != "warm_s"}
         values.update(layer_metrics(wl, tracer, samples, pass_walls, extra))
         values.update(figures)
         values["gate.error_rate"] = error_rate
@@ -432,7 +433,7 @@ def _main(args, work: str) -> int:
     else:
         lat = [s[3] for s in measured]
         values = {
-            "setup_s": statistics.median(setups),
+            "setup_s": setup_s,
             "throughput_ops_s": len(measured) / window_s,
             "latency_p50_s": m.percentile(lat, 50),
             "latency_tail_s": m.tail_latency(lat, tail_pct),
@@ -441,7 +442,8 @@ def _main(args, work: str) -> int:
         units = {**declared["end_to_end"], **declared["per_layer"]}
         for k, v in {**values, **figures}.items():
             print(f"# {k} {v:.6g} {units[k]}")
-        print(f"# latency_tail_s is p{tail_pct} of {len(lat)} op latencies")
+        print(f"# latency_p50_s and latency_tail_s (p{tail_pct}) are Harrell-Davis "
+              f"estimates over {len(lat)} op latencies")
     undeclared = set(values) - set(declared[kind])
     if undeclared:
         raise KeyError(f"metrics missing from BENCHMARK.json: {sorted(undeclared)}")

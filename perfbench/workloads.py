@@ -4,13 +4,14 @@ Each workload offers the same steps to the runner:
 
 * ``setup(spark)`` — everything a client pays before its first query
   (view registration or table creation); returns per-layer timings;
-* ``warm(spark, duck)`` — one untimed pass before the window (for
-  ``headline`` it is also the correctness gate);
+* ``warm(spark)`` — one untimed pass before the window;
 * ``pass_ops(rng)`` — one pass of the workload's ops in seeded order;
 * ``run(spark, op, rng, trace)`` — one op; ``trace`` is ``None`` on
-  measured runs, so they pay for nothing but the op itself; traced, it
-  also returns the job groups of the op's Spark jobs and its exec interval;
-* ``gate(spark, duck, timed)`` — the correctness verdict per timed op;
+  measured runs, so they pay for nothing but the op itself and the
+  observation of its row count; traced, it also returns the job groups of
+  the op's Spark jobs and its exec interval;
+* ``gate(spark, duck, timed)`` — after the window, the correctness
+  verdict per timed op;
 * ``finish(spark)`` / ``figures(samples, state)`` — state after the
   window, and the workload's own end-to-end figures;
 * ``groups(op)`` — the per-layer op groups an op's wall counts toward.
@@ -18,8 +19,9 @@ Each workload offers the same steps to the runner:
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
-import shutil
 import time
 
 from lakehouse_variance_spark import registry
@@ -29,12 +31,35 @@ from lakehouse_variance_spark.sources import snapshots
 from lakehouse_variance_spark.tables import load_table
 from scripts.canon import canon_hash
 
+import headline_mix
 from metrics import bytes_per_user_byte, percentile
 
 
 def drain(df) -> None:
     """Run the whole plan and discard the rows (Spark's ``noop`` sink)."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def observe_rows(df):
+    """``df`` with its row count observed while it runs: the gate checks
+    the count of every timed execution after the window."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def observed_rows(obs, wait_s: float = 5.0) -> int | None:
+    """The row count an observation saw, or ``None`` if its query never
+    reported one (the listener bus delivers it asynchronously)."""
+    future = obs._jo.future()
+    deadline = time.perf_counter() + wait_s
+    while not future.isCompleted():
+        if time.perf_counter() > deadline:
+            return None
+        time.sleep(0.01)
+    return int(obs.get["rows"])
 
 
 def _traced(trace, name: str, fn):
@@ -45,43 +70,52 @@ def _traced(trace, name: str, fn):
         return fn()
 
 
+def run_query(spark, data_dir: str, op: str, trace) -> dict:
+    """One registry query, built and drained, with its row count observed.
+
+    Untraced (``trace`` is ``None``) the query is drained through ``noop``,
+    as a client would.  Traced, the build, Catalyst planning and execution
+    are separate spans: ``executedPlan()`` plans the query, and
+    ``Dataset.collect`` on the JVM side runs that same planned query inside
+    its own SQL execution (rows stay in the JVM), so the query is planned
+    once.  Traced, the result also names the job groups of the build and
+    the execution and the execution's wall interval."""
+    fn = registry.QUERIES[op]
+    if trace is None:
+        df, obs = observe_rows(fn(spark, data_dir))
+        drain(df)
+        return {"rows": obs}
+    build_group = trace.counts.tag("build")
+    df, obs = _traced(trace, "build", lambda: observe_rows(fn(spark, data_dir)))
+    exec_group = trace.counts.tag("exec")
+    _traced(trace, "plan", df._jdf.queryExecution().executedPlan)
+    t0 = time.time()
+    _traced(trace, "drain", df._jdf.collect)
+    return {"rows": obs, "build_group": build_group, "exec_group": exec_group,
+            "window": (t0, time.time())}
+
+
 # ---------------------------------------------------------------------------
-# headline: a fixed cross-section of bench.HEADLINE_QUERIES
+# headline: a measured mix of bench.HEADLINE_QUERIES
 # ---------------------------------------------------------------------------
 
 
 class Headline:
-    """Eleven of the ``bench.py`` headline queries over the generated
-    sf0.1 tables, one per operator family, drained through ``noop``.
+    """A weighted mix of the ``bench.py`` headline queries over the
+    generated sf0.1 tables, drained through ``noop``.
 
-    A warm pass of all 99 headline queries takes about 92 s on a 4-core
-    host (196 s cold), longer than a whole benchmark run may take, so the
-    pass is a fixed cross-section: every family whose per-query constants
-    differ (DataFrame relational, verbatim TPC-DS / SSB / TPC-H texts over
-    derived schemas, trace analytics, Arrow/Python-worker operators,
-    similarity, dedup, CDC, streaming state).  The mix is identical in
-    every run; the seed only orders it.
+    A warm pass of all 99 headline queries takes longer than a whole
+    benchmark run may, so a pass runs ``MIX``: queries and repeat counts
+    that ``headline_mix.py`` derived from a measured profile of the 99
+    (``headline_profile.json``) so that the pass's time shares per
+    registering module and its build / plan / exec split match the 99's.
+    The mix is identical in every run; the seed only orders it.
     """
 
     name = "headline"
-    OPS = (
-        "q1_pricing_summary",          # DataFrame relational
-        "tpcds_q51",                   # TPC-DS text with a fact prune
-        "tpcds_wl_321",                # TPC-DS text the prunes never touch
-        "ssb_q2_1",                    # SSB text over the derived star
-        "tpch_q17",                    # TPC-H text
-        "trace_variance_decomposition",  # trace analytics
-        "media_frame_sample",          # Arrow / Python workers
-        "embed_cosine_topk",           # vector similarity
-        "dedup_exact",                 # corpus dedup
-        "cdc_apply_latest",            # CDC merge
-        "event_transition_counts",     # streaming state
-    )
-    # the per-layer TPC-DS groups: texts with and without a fact prune
-    PRUNE_GROUP = ("tpcds_q51",)
-    CONTROL_GROUP = ("tpcds_wl_321",)
-    MIN_PASSES = 3
-    ops_per_pass = len(OPS)
+    MIX = headline_mix.MIX
+    MIN_PASSES = 2
+    ops_per_pass = sum(MIX.values())
     # view families the ops read; registered during setup
     FAMILIES = (
         ("base", register_sf_views),
@@ -91,24 +125,17 @@ class Headline:
 
     def __init__(self, data_dir: str, work_dir: str):
         self.data_dir = data_dir
-        missing = [n for n in self.OPS if n not in registry.QUERIES]
+        missing = [n for n in self.MIX if n not in registry.QUERIES]
         if missing:
             raise KeyError(f"ops not in the registry: {missing}")
-        self.gate_ok: dict[str, bool] = {}
-        self.warm_s: dict[str, float] = {}
-
-    def module(self, op: str) -> str:
-        return registry.QUERIES[op].__module__.removeprefix(
-            "lakehouse_variance_spark."
-        )
+        self.first: dict[str, object] = {}
 
     def groups(self, op: str) -> list[str]:
         """Per-layer op groups ``op``'s wall counts toward."""
-        out = [f"ops.{self.module(op)}.wall_s"]
-        if op in self.PRUNE_GROUP:
-            out.append("tpcds.prune_group_s")
-        if op in self.CONTROL_GROUP:
-            out.append("tpcds.control_group_s")
+        out = [headline_mix.module_key(op)]
+        if op.startswith("tpcds_q"):
+            out.append("tpcds.prune_group_s" if headline_mix.has_fact_prune(op)
+                       else "tpcds.control_group_s")
         return out
 
     def setup(self, spark) -> dict[str, float]:
@@ -120,52 +147,68 @@ class Headline:
         out["plans.materialize_s"] = sum(out.values())
         return out
 
-    def warm(self, spark, duck) -> None:
-        """Correctness gate, run before the window so it also warms
-        codegen: every op's rows and value hash against its DuckDB
-        oracle on the same generated tables (rows only without one)."""
-        for op in self.OPS:
-            t0 = time.perf_counter()
+    def warm(self, spark) -> None:
+        """One untimed run of every op; its result is kept for the gate."""
+        for op in self.MIX:
             try:
-                got = registry.QUERIES[op](spark, self.data_dir).toPandas()
-                h = canon_hash(got)
-                oracle = registry.ORACLES.get(op)
-                if oracle is None:
-                    ok = True
-                else:
-                    want = duck.sql(oracle).df()
-                    ok = len(got) == len(want) and h == canon_hash(want)
-            except Exception as exc:  # noqa: BLE001 - a failed op is a result
-                print(f"# gate {op}: {type(exc).__name__}: {str(exc)[:200]}")
-                ok = False
-            self.gate_ok[op] = ok
-            self.warm_s[op] = time.perf_counter() - t0
+                self.first[op] = registry.QUERIES[op](spark, self.data_dir).toPandas()
+            except Exception as exc:  # noqa: BLE001 - the gate counts it
+                print(f"# warm {op}: {type(exc).__name__}: {str(exc)[:200]}")
+                self.first[op] = None
 
     def pass_ops(self, rng) -> list[str]:
-        ops = list(self.OPS)
+        ops = [op for op, k in self.MIX.items() for _ in range(k)]
         rng.shuffle(ops)
         return ops
 
     def run(self, spark, op: str, rng, trace) -> dict:
-        fn = registry.QUERIES[op]
-        if trace is None:
-            drain(fn(spark, self.data_dir))
-            return {}
-        build_group = trace.counts.tag("build")
-        df = _traced(trace, "build", lambda: fn(spark, self.data_dir))
-        exec_group = trace.counts.tag("exec")
-        _traced(trace, "plan", lambda: df._jdf.queryExecution().executedPlan())
-        t0 = time.time()
-        _traced(trace, "drain", lambda: drain(df))
-        window = (t0, time.time())
-        return {"build_group": build_group, "exec_group": exec_group,
-                "window": window}
+        return run_query(spark, self.data_dir, op, trace)
+
+    def expected(self, duck, op: str) -> tuple[int, str] | None:
+        """(rows, value hash) of ``op``'s DuckDB oracle on the generated
+        tables, cached next to them per oracle text; ``None`` without an
+        oracle."""
+        oracle = registry.ORACLES.get(op)
+        if oracle is None:
+            return None
+        key = hashlib.md5(f"{op}\n{oracle}".encode()).hexdigest()
+        path = os.path.join(f"{self.data_dir}-oracles", f"{key}.json")
+        if os.path.exists(path):
+            with open(path) as fh:
+                return tuple(json.load(fh))
+        want = duck.sql(oracle).df()
+        out = (len(want), canon_hash(want))
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path + ".tmp", "w") as fh:
+            json.dump(out, fh)
+        os.replace(path + ".tmp", path)
+        return out
+
+    def check(self, duck, op: str) -> tuple[bool, int | None]:
+        """Compare the warm-up run's rows and value hash with the oracle's;
+        returns (verdict, expected row count).  Without an oracle only the
+        row count is checked, against the warm-up run's."""
+        got = self.first[op]
+        if got is None:
+            return False, None
+        want = self.expected(duck, op)
+        if want is None:
+            return True, len(got)
+        return len(got) == want[0] and canon_hash(got) == want[1], want[0]
 
     def gate(self, spark, duck, timed: list[tuple[str, object]]) -> list[bool]:
-        return [self.gate_ok.get(op, False) for op, _ in timed]
+        """A timed execution passes when the row count it observed while
+        it ran equals the oracle's and the op's warm-up result matched the
+        oracle's rows and value hash."""
+        checks = {op: self.check(duck, op) for op in self.MIX}
+        out = []
+        for op, res in timed:
+            ok, want_rows = checks[op]
+            out.append(ok and observed_rows(res["rows"]) == want_rows)
+        return out
 
     def finish(self, spark) -> dict:
-        return {"warm_s": self.warm_s}
+        return {}
 
     def figures(self, samples, state: dict) -> dict:
         return {}
@@ -218,7 +261,8 @@ class LakehouseWrites:
     of the current version and one of an earlier version.  The table
     grows by about one slice per pass.  Every version an op produced or
     read is checked afterwards against DuckDB applying the same sequence
-    to the generated lineitem file.
+    to the generated lineitem file, and every timed read must have
+    observed the row count of the version it read.
     """
 
     name = "lakehouse_writes"
@@ -231,9 +275,8 @@ class LakehouseWrites:
     def __init__(self, data_dir: str, work_dir: str):
         self.data_dir = data_dir
         self.work_dir = work_dir
-        self.n_tables = 0
         self.table = ""
-        self.slice_bytes = self._measure_slices()
+        self.want_rows: dict[int, int] = {}
 
     # -- model of the table: per live slice, the scattered deletes applied
     # since it was appended; one frozen copy per version
@@ -243,7 +286,7 @@ class LakehouseWrites:
         self.live: list[tuple[int, tuple[str, ...]]] = []
         self.models: dict[int, tuple] = {}
         self.head = 0
-        self.user_bytes = 0
+        self.appended: list[int] = []
         self.noop_deletes = 0
         self.deletes = 0
 
@@ -271,15 +314,12 @@ class LakehouseWrites:
             df, self.table, "append"))
         self.next_slice += 1
         self.live.append((s, ()))
-        self.user_bytes += self.slice_bytes[s]
+        self.appended.append(s)
         return self._commit(v)
 
     def setup(self, spark) -> dict[str, float]:
         t0 = time.perf_counter()
-        if self.table:
-            shutil.rmtree(self.table, ignore_errors=True)
-        self.n_tables += 1
-        self._reset(os.path.join(self.work_dir, f"table{self.n_tables}"))
+        self._reset(os.path.join(self.work_dir, "table"))
         for _ in range(INIT_SLICES):
             self._append(spark)
         return {"snapshots.create_s": time.perf_counter() - t0}
@@ -293,7 +333,7 @@ class LakehouseWrites:
         ids = t["l_orderkey"].to_numpy() // SLICE_ORDERS
         return [t.filter(ids == s).nbytes for s in range(N_SLICES)]
 
-    def warm(self, spark, duck) -> None:
+    def warm(self, spark) -> None:
         import random
 
         rng = random.Random(0)
@@ -337,18 +377,20 @@ class LakehouseWrites:
         elif op == "optimize":
             v = self._commit(_traced(trace, "commit", lambda:
                                      snapshots.optimize_snapshot(spark, self.table)))
-        elif op == "read":
-            v = self.head
-            _traced(trace, "read", lambda: drain(
-                snapshots.read_snapshot(spark, self.table)))
-        elif op == "read_asof":
-            older = sorted(self.models)[-9:-1]
-            v = rng.choice(older)
-            _traced(trace, "read", lambda: drain(
-                snapshots.read_snapshot(spark, self.table, v)))
+        elif op in ("read", "read_asof"):
+            v = self.head if op == "read" else rng.choice(sorted(self.models)[-9:-1])
+
+            def read():
+                df, obs = observe_rows(snapshots.read_snapshot(spark, self.table, v))
+                drain(df)
+                return obs
+
+            obs = _traced(trace, "read", read)
         else:
             raise ValueError(op)
         out = {"version": v}
+        if op in ("read", "read_asof"):
+            out["rows"] = obs
         if trace is not None:
             out.update(exec_group=exec_group, window=(t0, time.time()))
         return out
@@ -369,7 +411,8 @@ class LakehouseWrites:
 
     def check_versions(self, spark, duck, versions: list[int]) -> dict[int, bool]:
         """One digest job per engine over all ``versions``, compared per
-        version with canon_hash."""
+        version with canon_hash; also keeps each version's expected row
+        count in ``want_rows``."""
         from functools import reduce
 
         from pyspark.sql import functions as F
@@ -394,23 +437,29 @@ class LakehouseWrites:
         for v in versions:
             g = got[got.version == v].drop(columns="version")
             w = want[want.version == v].drop(columns="version")
+            self.want_rows[v] = int(w["n"].sum())
             out[v] = len(g) > 0 and len(g) == len(w) and canon_hash(
                 g.reset_index(drop=True)) == canon_hash(w.reset_index(drop=True))
         return out
 
     def gate(self, spark, duck, timed: list[tuple[str, object]]) -> list[bool]:
         """Check every version a timed op produced or read, then give each
-        op the verdict of its version."""
+        op the verdict of its version; a timed read also passes only if
+        the row count it observed while it ran is the version's."""
         versions = sorted({res["version"] for _, res in timed})
         verdict = self.check_versions(spark, duck, versions) if versions else {}
-        return [verdict[res["version"]] for _, res in timed]
+        return [verdict[res["version"]] and (
+            "rows" not in res
+            or observed_rows(res["rows"]) == self.want_rows.get(res["version"]))
+            for _, res in timed]
 
     def finish(self, spark) -> dict:
         """Table-level figures after the window."""
         log = snapshots.history(self.table)
+        slice_bytes = self._measure_slices()
         return {
             "table_bytes": dir_bytes(self.table),
-            "user_bytes": self.user_bytes,
+            "user_bytes": sum(slice_bytes[s] for s in self.appended),
             "manifest_bytes": dir_bytes(os.path.join(self.table, "_versions")),
             "live_files": next(h["n_files"] for h in log if h["version"] == self.head),
             "versions": len(log),
