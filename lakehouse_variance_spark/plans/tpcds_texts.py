@@ -69,15 +69,15 @@ every SF either way — 0 rows on both engines is still a verified match.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from lakehouse_variance_spark.plans.synth_common import catalog_state_dirty
 from lakehouse_variance_spark.plans.tpcds_schema import (
     oracle_sql_for,
     register_tpcds_views,
 )
 from lakehouse_variance_spark.registry import register
+from lakehouse_variance_spark.session import env_int
 from lakehouse_variance_spark.tables import _app_id
 
 TPCDS_TEXTS: dict[str, str] = {}
@@ -5162,9 +5162,7 @@ _FACT_PRUNES: dict[str, tuple] = {
 # losers AT ANY scale factor (the gate reads the live Catalyst estimate, so
 # 10x data flips the sales facts in automatically); a deployment tunes
 # $SPARK_GRAFT_PRUNE_MIN_BYTES like Spark's own threshold confs.
-_PRUNE_MIN_FACT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PRUNE_MIN_BYTES", str(16 << 20))
-)
+_PRUNE_MIN_FACT_BYTES = env_int("SPARK_GRAFT_PRUNE_MIN_BYTES", 16 << 20)
 # Key-count cap for NON-CONTIGUOUS key sets (contiguous runs collapse to a
 # two-literal BETWEEN and never hit this): a many-thousand-value In
 # expression costs analysis/pushdown superlinearly while its selectivity is
@@ -5173,7 +5171,7 @@ _PRUNE_MIN_FACT_BYTES = int(
 # ~2.5k-value q37/q82 item lists still won 6.3x/2.5x at the same scale.
 # 4096 sits between the measured-fine 2.5k and the measured-disaster 47k;
 # the analog of Spark's own bloom-filter maxNumItems bound.
-_PRUNE_MAX_KEYS = int(os.environ.get("SPARK_GRAFT_PRUNE_MAX_KEYS", "4096"))
+_PRUNE_MAX_KEYS = env_int("SPARK_GRAFT_PRUNE_MAX_KEYS", 4096)
 _VIEW_BYTES: dict[tuple[str, str, str], int] = {}
 
 
@@ -5192,7 +5190,9 @@ def _view_bytes(spark: SparkSession, sf_dir: str, view: str) -> int:
                 )
             )
         except Exception:
-            got = 1 << 62  # unknown estimate: fail open, apply the prune
+            # Unknown estimate: fail open (apply the prune) for this call
+            # only; the next call asks Catalyst again.
+            return 1 << 62
         _VIEW_BYTES[key] = got
     return got
 
@@ -5243,14 +5243,29 @@ def _apply_fact_prunes(
                 pred = F.lit(False)
             preds.setdefault(view, []).append(pred)
     restores: dict[str, DataFrame] = {}
-    for view, plist in preds.items():
-        orig = spark.table(view)
-        restores[view] = orig
-        combined = plist[0]
-        for p in plist[1:]:
-            combined = combined & p
-        orig.filter(combined).createOrReplaceTempView(view)
+    try:
+        for view, plist in preds.items():
+            orig = spark.table(view)
+            restores[view] = orig
+            combined = plist[0]
+            for p in plist[1:]:
+                combined = combined & p
+            orig.filter(combined).createOrReplaceTempView(view)
+    except BaseException:
+        # A failure partway must not leave pruned shadows registered under
+        # a valid catalog token: put back what was shadowed, and if even
+        # that fails, make the next query re-register every view.
+        try:
+            _restore_views(restores)
+        except Exception:
+            catalog_state_dirty(spark)
+        raise
     return restores
+
+
+def _restore_views(restores: dict[str, DataFrame]) -> None:
+    for view, orig in restores.items():
+        orig.createOrReplaceTempView(view)
 
 
 def _register_tpcds_texts() -> None:
@@ -5271,8 +5286,7 @@ def _register_tpcds_texts() -> None:
             finally:
                 # ...so re-pointing the names back is safe immediately, and
                 # the catalog is restored even when analysis throws.
-                for view, orig in restores.items():
-                    orig.createOrReplaceTempView(view)
+                _restore_views(restores)
 
         run.__name__ = name
         run.__doc__ = (

@@ -23,9 +23,13 @@ filesystem:
 Readers never LIST the data directory (an object-store LIST over millions
 of files is the scalability killer manifests exist to avoid): they read
 one small JSON and pass the explicit file list to the parquet source.
-Schema evolution rides parquet's mergeSchema on read: each manifest also
-records the schema DDL at commit time, so readers of an old version see
-the old shape.
+Planning is metadata-only, as in Iceberg: each manifest records the
+table's read ``schema`` (Spark's JSON form) at that version, and every
+read hands it to the parquet source, so no footer is opened to infer a
+schema. An append merges the parent's schema with the new data's by field
+name (the parent's order first, new columns after; a conflicting type
+fails the commit), so older files read the added columns as NULL and
+readers of an old version see the old shape.
 
 Named refs (Iceberg's branch/tag contract, spec v2 "refs" map): a TAG is
 an immutable name → version pin (audit/WAP publish points); a BRANCH is a
@@ -46,6 +50,13 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 
 def _versions_dir(table_dir: str) -> Path:
@@ -74,6 +85,61 @@ def _read_manifest(table_dir: str, version: int) -> dict:
             f"snapshot v{version} does not exist at {table_dir}"
         )
     return json.loads(path.read_text())
+
+
+def _table_schema(manifest: dict) -> StructType:
+    """The read schema a manifest records (the one every read plans with)."""
+    if "schema" not in manifest:
+        raise ValueError(
+            f"snapshot v{manifest['version']} manifest has no 'schema' field"
+        )
+    return StructType.fromJson(manifest["schema"])
+
+
+def _scan(spark: SparkSession, manifest: dict, files: list[str]) -> DataFrame:
+    """Parquet scan of ``files`` under the manifest's schema: no footer is
+    read at planning time, and files written before a column was added
+    read it as NULL."""
+    return spark.read.schema(_table_schema(manifest)).parquet(*files)
+
+
+def _merge_type(table: DataType, new: DataType, column: str) -> DataType:
+    """Spark's parquet schema-merge rule, applied once at commit time:
+    structs merge by field name (the table's order, then new fields),
+    arrays and maps merge their element types, nullability widens, and
+    any other pair must be the same type."""
+    if isinstance(table, StructType) and isinstance(new, StructType):
+        added = {f.name: f for f in new.fields}
+        fields = []
+        for f in table.fields:
+            g = added.pop(f.name, None)
+            if g is not None:
+                name = f"{column}.{f.name}" if column else f.name
+                f = StructField(
+                    f.name,
+                    _merge_type(f.dataType, g.dataType, name),
+                    f.nullable or g.nullable,
+                    f.metadata,
+                )
+            fields.append(f)
+        return StructType(fields + list(added.values()))
+    if isinstance(table, ArrayType) and isinstance(new, ArrayType):
+        return ArrayType(
+            _merge_type(table.elementType, new.elementType, f"{column}[]"),
+            table.containsNull or new.containsNull,
+        )
+    if isinstance(table, MapType) and isinstance(new, MapType):
+        return MapType(
+            _merge_type(table.keyType, new.keyType, f"{column}.key"),
+            _merge_type(table.valueType, new.valueType, f"{column}.value"),
+            table.valueContainsNull or new.valueContainsNull,
+        )
+    if table != new:
+        raise ValueError(
+            f"column {column!r}: table type {table.simpleString()} conflicts "
+            f"with {new.simpleString()}"
+        )
+    return table
 
 
 def _commit(table_dir: str, manifest: dict) -> int:
@@ -222,22 +288,26 @@ def _commit_dataframe(
     build the manifest (append = parent's files + new, overwrite = new
     only), publish it atomically, and advance ``ref``. Every writer path
     (mainline, branch, streaming sink) funnels through here so fixes land
-    once."""
+    once. The manifest's schema is ``df``'s for an overwrite, and the
+    parent's merged with ``df``'s for an append; a type conflict raises
+    before any file is written."""
+    schema, base = df.schema, []
+    if mode == "append" and parent > 0:
+        parent_manifest = _read_manifest(table_dir, parent)
+        schema = _merge_type(_table_schema(parent_manifest), schema, "")
+        base = parent_manifest["files"]
     version = current_version(table_dir) + 1
     commit_id = uuid.uuid4().hex
     data_dir = Path(table_dir) / "data" / f"c{version}-{commit_id[:8]}"
     df.write.mode("error").parquet(str(data_dir))
     new_files = sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file())
-    files = new_files
-    if mode == "append" and parent > 0:
-        files = _read_manifest(table_dir, parent)["files"] + new_files
     manifest = {
         "version": version,
         "parent": parent,
         "operation": operation,
         "commit_id": commit_id,
-        "schema_ddl": df.schema.simpleString(),
-        "files": files,
+        "schema": schema.jsonValue(),
+        "files": base + new_files,
     }
     if extra:
         manifest.update(extra)
@@ -294,16 +364,15 @@ def read_snapshot(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """Read the table as of ``version`` (latest when None) — one manifest
-    read plus an explicit-file-list parquet scan; the data directory is
-    never listed. ``mergeSchema`` unifies evolved schemas (columns added
-    in later commits read as NULL for older files)."""
+    read plus an explicit-file-list parquet scan under the schema the
+    manifest records. Planning opens no data file and the data directory
+    is never listed; columns added in later commits read as NULL for
+    older files."""
     v = version if version is not None else _main_head(table_dir)
     manifest = _read_manifest(table_dir, v)
     if not manifest["files"]:
         raise ValueError(f"snapshot v{v} has no data files")
-    return (
-        spark.read.option("mergeSchema", "true").parquet(*manifest["files"])
-    )
+    return _scan(spark, manifest, manifest["files"])
 
 
 def rollback(table_dir: str, to_version: int) -> int:
@@ -319,7 +388,7 @@ def rollback(table_dir: str, to_version: int) -> int:
             "parent": parent,
             "operation": f"rollback->{to_version}",
             "commit_id": commit_id,
-            "schema_ddl": old["schema_ddl"],
+            "schema": _table_schema(old).jsonValue(),
             "files": old["files"],
         },
     )
@@ -504,31 +573,36 @@ def delete_from_snapshot(
     """Row-level DELETE, copy-on-write: rewrite ONLY the data files that
     contain matching rows (Iceberg's copy-on-write delete granularity).
 
-    File selection uses ``input_file_name()`` — one scan with the
-    predicate pushed down finds the touched files; untouched files carry
-    over into the new manifest by reference (zero I/O for them). The
-    rewritten files hold the touched files' surviving rows. Old versions
-    still see the pre-delete data (time travel is unaffected; physical
-    reclaim stays expire_snapshots' job).
+    File selection is one scan with the predicate pushed down: the
+    matching rows' ``_metadata.file_path`` values are gathered by an
+    ``observe`` (a set, so task retries cannot add duplicates) while the
+    scan drains to the ``noop`` sink. Untouched files carry over into the
+    new manifest by reference (zero I/O for them). The rewritten files
+    hold the touched files' surviving rows. Old versions still see the
+    pre-delete data (time travel is unaffected; physical reclaim stays
+    expire_snapshots' job).
     """
+    from urllib.parse import unquote, urlparse
+
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     parent = _main_head(table_dir)
     manifest = _read_manifest(table_dir, parent)
-    df = read_snapshot(spark, table_dir, parent)
-    touched = {
-        r[0]
-        for r in df.filter(predicate)
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    }
-    # input_file_name returns URIs (file:///...); manifests store plain paths
-    from urllib.parse import unquote, urlparse
-
+    obs = Observation()
+    (
+        read_snapshot(spark, table_dir, parent)
+        .filter(predicate)
+        .select("_metadata.file_path")
+        .observe(obs, F.collect_set("file_path").alias("files"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    # file_path is a URI (file:///...); manifests store plain paths
     touched_paths = {
         unquote(urlparse(t).path) if "://" in t or t.startswith("file:") else t
-        for t in touched
+        for t in obs.get["files"]
     }
     keep_files = [
         f for f in manifest["files"] if f not in touched_paths
@@ -552,15 +626,11 @@ def delete_from_snapshot(
     # DELETE semantics remove rows where the predicate is TRUE; rows where
     # it evaluates NULL must SURVIVE. A bare NOT(pred) filter drops them
     # (NOT NULL is NULL → filtered out) — coalesce to FALSE first.
-    # The survivors read pins the TABLE's merged schema explicitly: a
-    # touched file from before a schema evolution lacks later-added
-    # columns, and a predicate over such a column would otherwise fail to
-    # resolve (the explicit schema surfaces them as NULL, same as the
-    # mergeSchema read that selected the files).
-    survivors = (
-        spark.read.schema(df.schema)
-        .parquet(*sorted(touched_paths))
-        .filter(f"NOT coalesce({predicate}, false)")
+    # The survivors scan uses the TABLE's schema: a touched file from
+    # before a schema evolution lacks later-added columns, which read as
+    # NULL instead of failing to resolve in the predicate.
+    survivors = _scan(spark, manifest, sorted(touched_paths)).filter(
+        f"NOT coalesce({predicate}, false)"
     )
     survivors.write.mode("error").parquet(str(data_dir))
     new_files = sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file())
@@ -571,7 +641,7 @@ def delete_from_snapshot(
             "parent": parent,
             "operation": f"delete-where({predicate})",
             "commit_id": commit_id,
-            "schema_ddl": manifest["schema_ddl"],
+            "schema": manifest["schema"],
             "files": keep_files + new_files,
         },
     )
@@ -585,10 +655,13 @@ def optimize_snapshot(spark: SparkSession, table_dir: str) -> int:
     new version whose manifest lists only the compacted files. Readers of
     old versions keep the original files; expire_snapshots reclaims them
     once out of retention."""
+    import pyarrow.parquet as pq
+
     parent = _main_head(table_dir)
     manifest = _read_manifest(table_dir, parent)
     df = read_snapshot(spark, table_dir, parent)
-    n_rows = df.count()
+    # Row count from the parquet footers, not a count job over the data.
+    n_rows = sum(pq.read_metadata(f).num_rows for f in manifest["files"])
     # ~128 MB-equivalent sizing downscaled to fixture volumes: one output
     # file per 64k rows, minimum 1 (the production knob is bytes-based via
     # spark.sql.files.maxRecordsPerFile / target-file-size).
@@ -605,7 +678,7 @@ def optimize_snapshot(spark: SparkSession, table_dir: str) -> int:
             "parent": parent,
             "operation": f"optimize({len(manifest['files'])}->{len(new_files)})",
             "commit_id": commit_id,
-            "schema_ddl": manifest["schema_ddl"],
+            "schema": manifest["schema"],
             "files": new_files,
         },
     )
@@ -703,12 +776,11 @@ def read_version_changes(
             "versions are on different lineages (branch vs main)"
         )
     old = set(_read_manifest(table_dir, from_version)["files"])
-    new_files = [
-        f for f in _read_manifest(table_dir, to_version)["files"] if f not in old
-    ]
+    manifest = _read_manifest(table_dir, to_version)
+    new_files = [f for f in manifest["files"] if f not in old]
     if not new_files:
         raise ValueError("no appended files in range")
-    return spark.read.option("mergeSchema", "true").parquet(*new_files)
+    return _scan(spark, manifest, new_files)
 
 
 def publish_branch(table_dir: str, branch: str) -> int:

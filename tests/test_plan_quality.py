@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from lakehouse_variance_spark import registry
 from tests.conftest import SF_DIR
 
@@ -346,6 +348,67 @@ def test_fact_prunes_reach_scans_and_restore_catalog(spark, monkeypatch):
     registry.QUERIES["tpcds_q67"](spark, SF_DIR)  # shadows + restores
     again = spark.sql("SELECT count(*) FROM store_sales").collect()[0][0]
     assert full == again, "fact prune leaked past its query"
+
+
+def test_fact_prune_failure_restores_shadowed_views(spark, monkeypatch):
+    """A failure while shadowing the SECOND fact view must put the first
+    one back before re-raising: the catalog token still reads valid, so a
+    leaked shadow would silently prune every later query."""
+    import lakehouse_variance_spark.plans.tpcds_texts as tpcds_texts
+    from lakehouse_variance_spark.plans.tpcds_schema import (
+        register_tpcds_views,
+    )
+
+    monkeypatch.setattr(tpcds_texts, "_PRUNE_MIN_FACT_BYTES", 0)
+    register_tpcds_views(spark, SF_DIR)
+    prunes = tpcds_texts._FACT_PRUNES["tpcds_q4"]
+    (first, _), (second, _) = prunes[0][1][:2]
+
+    def rows():
+        return spark.table(first).count()
+
+    full = rows()
+    restores = tpcds_texts._apply_fact_prunes(spark, SF_DIR, prunes)
+    pruned = rows()
+    tpcds_texts._restore_views(restores)
+    assert pruned < full, "the prune must drop rows for this check to bite"
+
+    table = spark.table
+
+    def failing_table(name):
+        if name == second:
+            raise RuntimeError("injected shadow failure")
+        return table(name)
+
+    monkeypatch.setattr(spark, "table", failing_table)
+    with pytest.raises(RuntimeError, match="injected"):
+        tpcds_texts._apply_fact_prunes(spark, SF_DIR, prunes)
+    monkeypatch.setattr(spark, "table", table)
+    assert rows() == full, "first view left pruned after the failure"
+
+
+def test_view_bytes_does_not_memoize_failed_estimate(spark, monkeypatch):
+    """A failed size estimate fails open for that call only; it must not
+    pin the 1 << 62 sentinel for the rest of the session."""
+    import lakehouse_variance_spark.plans.tpcds_texts as tpcds_texts
+    from lakehouse_variance_spark.plans.tpcds_schema import (
+        register_tpcds_views,
+    )
+
+    register_tpcds_views(spark, SF_DIR)
+    monkeypatch.setattr(tpcds_texts, "_VIEW_BYTES", {})
+    table = spark.table
+
+    def broken(name):
+        raise RuntimeError("no estimate")
+
+    monkeypatch.setattr(spark, "table", broken)
+    assert tpcds_texts._view_bytes(spark, SF_DIR, "store_sales") == 1 << 62
+    assert tpcds_texts._VIEW_BYTES == {}
+    monkeypatch.setattr(spark, "table", table)
+    got = tpcds_texts._view_bytes(spark, SF_DIR, "store_sales")
+    assert 0 < got < 1 << 62
+    assert list(tpcds_texts._VIEW_BYTES.values()) == [got]
 
 
 def test_ssb_flights_broadcast_all_dimensions(spark):

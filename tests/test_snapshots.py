@@ -1,11 +1,13 @@
 """Snapshot/time-travel laws: append/overwrite visibility, rollback,
-schema evolution, commit-log integrity, and expire semantics."""
+schema evolution, commit-log integrity, expire semantics, and
+metadata-only planning (the manifest schema; job ceilings)."""
 
 from __future__ import annotations
 
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from lakehouse_variance_spark.sources.snapshots import (
     current_version,
@@ -86,7 +88,7 @@ def test_snapshot_concurrent_commit_detected(spark, tmp_path):
             "parent": 1,
             "operation": "append",
             "commit_id": cid,
-            "schema_ddl": "x",
+            "schema": {"type": "struct", "fields": []},
             "files": [],
         }
 
@@ -453,3 +455,145 @@ def test_delete_with_predicate_on_evolved_column(spark, tmp_path):
     snap.delete_from_snapshot(spark, t, "c = 'x'")
     left = {r.id for r in read_snapshot(spark, t).collect()}
     assert left == {1, 2, 4}  # old rows (c NULL) survive; only id=3 deleted
+
+
+def _nullable(t):
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _assert_schema_parity(spark, t, v):
+    """The manifest's schema must be what parquet's mergeSchema would
+    infer over the files that version lists."""
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    files = snap._read_manifest(t, v)["files"]
+    inferred = spark.read.option("mergeSchema", "true").parquet(*files).schema
+    got = read_snapshot(spark, t, v).schema
+    assert _nullable(got) == _nullable(inferred), f"v{v}"
+
+
+def test_manifest_schema_matches_merge_inference_on_every_commit(
+    spark, tmp_path
+):
+    """Every commit path records the schema a mergeSchema read of its
+    files would infer: appends that add, omit and reorder columns (and
+    widen a nested struct, an array and a map), overwrite, delete,
+    optimize, rollback, branch commits and both streaming sinks."""
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    mk = spark.createDataFrame
+    versions = [
+        write_snapshot(
+            mk([(1, 10, (1,), [1], {"k": 1}), (2, 20, (2,), None, None)],
+               "id long, a long, s struct<x:int>, arr array<int>, "
+               "m map<string,int>"),
+            t, mode="overwrite"),
+        write_snapshot(  # adds a column and a nested field; its array and
+            # map hold no nulls, so their element nullability must widen
+            mk([(3, 30, (3, "p"), "x")],
+               "id long, a long, s struct<x:int,y:string>, c string")
+            .withColumn("arr", F.array(F.lit(3)))
+            .withColumn("m", F.create_map(F.lit("k"), F.lit(3))), t),
+        write_snapshot(mk([(4, "y")], "id long, c string"), t),  # omits a, s
+        write_snapshot(mk([("z", 50, 5)], "c string, a long, id long"), t),
+    ]
+    versions.append(snap.delete_from_snapshot(spark, t, "c = 'x'"))
+    versions.append(snap.optimize_snapshot(spark, t))
+    versions.append(rollback(t, versions[2]))
+    snap.create_branch(t, "dev")
+    versions.append(snap.commit_to_branch(
+        mk([(6, 1.5)], "id long, d double"), t, "dev"))
+    versions.append(write_snapshot(mk([(7, "w")], "k int, v string"), t,
+                                   mode="overwrite"))
+    assert len(set(versions)) == len(versions) == current_version(t)
+    for v in versions:
+        _assert_schema_parity(spark, t, v)
+    assert read_snapshot(spark, t, versions[3]).columns == [
+        "id", "a", "s", "arr", "m", "c"]
+
+    s = str(tmp_path / "s")
+    batch = snap.snapshot_batch_writer(s)
+    batch(mk([(1, "a")], "id long, v string"), 0)
+    batch(mk([(2, "b", 2.0)], "id long, v string, w double"), 1)
+    merge = snap.snapshot_merge_writer(
+        s, lambda b, state: b.unionByName(state, allowMissingColumns=True))
+    merge(mk([(3, True)], "id long, flag boolean"), 2)
+    for v in range(1, current_version(s) + 1):
+        _assert_schema_parity(spark, s, v)
+
+
+def _jobs_launched(spark, fn):
+    """Spark jobs ``fn`` starts, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ceiling-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job ceiling")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_planning_job_ceilings(spark, tmp_path):
+    """Planning is metadata-only: building a read starts no job (no
+    schema inference), a DELETE finds its files in one scan plus the
+    rewrite, and OPTIMIZE sizes its output from the footers."""
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    orders = _orders(spark)
+    for i in range(3):
+        write_snapshot(orders.filter(f"o_orderkey % 3 = {i}").repartition(2), t)
+    assert _jobs_launched(spark, lambda: read_snapshot(spark, t)) == 0
+    assert _jobs_launched(spark, lambda: read_snapshot(spark, t, 1)) == 0
+    n = read_snapshot(spark, t).count()
+    n_del = read_snapshot(spark, t).filter("o_orderkey % 3 = 1").count()
+    assert _jobs_launched(
+        spark, lambda: snap.delete_from_snapshot(spark, t, "o_orderkey % 3 = 1")
+    ) <= 2
+    assert _jobs_launched(spark, lambda: snap.optimize_snapshot(spark, t)) <= 2
+    assert read_snapshot(spark, t).count() == n - n_del
+
+
+def test_append_type_conflict_publishes_nothing(spark, tmp_path):
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    write_snapshot(spark.createDataFrame([(1, 10)], "id long, a long"), t)
+    bad = spark.createDataFrame([(2, "ten")], "id long, a string")
+    with pytest.raises(ValueError, match="'a'"):
+        write_snapshot(bad, t)
+    snap.create_branch(t, "dev")
+    with pytest.raises(ValueError, match="'a'"):
+        snap.commit_to_branch(bad, t, "dev")
+    assert current_version(t) == 1
+    assert not list((tmp_path / "t" / "data").glob("c2-*"))
+    assert read_snapshot(spark, t).collect() == [(1, 10)]
+
+
+def test_manifest_without_schema_is_refused(spark, tmp_path):
+    import json
+
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    write_snapshot(spark.createDataFrame([(1,)], "id long"), t)
+    path = snap._manifest_path(t, 1)
+    manifest = json.loads(path.read_text())
+    del manifest["schema"]
+    path.write_text(json.dumps(manifest))
+    with pytest.raises(ValueError, match="'schema'"):
+        read_snapshot(spark, t)
