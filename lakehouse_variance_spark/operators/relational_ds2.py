@@ -874,7 +874,7 @@ def or_membership_existence_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every table — it would fail on partial datasets like the 10x probe's
     # replica set, which excludes documents/embeddings). Re-pointing shared
     # names outside the register helpers invalidates the catalog-ownership
-    # skip token (see synth_common._CATALOG_STATE).
+    # skip token (see synth_common.catalog_state_dirty).
     from lakehouse_variance_spark.plans import synth_common as synth
 
     for t in ("customer", "orders"):

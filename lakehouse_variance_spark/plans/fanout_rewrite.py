@@ -139,36 +139,23 @@ UNIQUE_KEYS: dict[str, dict[str, set[str]]] = {
 # measured "rewrite wins" band (>=340) with margin on both sides.
 FANOUT_BLOWUP_FACTOR = 50.0
 
-_SF_SIZES: dict[tuple[int, str, str], dict[str, int]] = {}
-
-
-def clear_size_memo() -> None:
-    """Invalidate all memoized row counts. Call after regenerating data
-    at a path already counted this process (ADVICE r10: the memo was
-    keyed only by (schema, sf_dir) and never invalidated, so rebuilt
-    datasets kept driving firing decisions with stale counts)."""
-    _SF_SIZES.clear()
-
-
-def sized_rewrite(text: str, schema: str, spark, sf_dir: str) -> str:
+def sized_rewrite(text: str, schema: str, spark) -> str:
     """Engine-side scale-aware rewrite for a REGISTERED workload text.
 
     Returns the count-product form when the rewrite fires (>=2 many-edges
-    always; single many-edge only when this sf_dir's table sizes show the
-    quadratic-density regime), else the text unchanged. Row counts are
-    memoized per (schema, sf_dir) so repeated query calls cost no extra
-    jobs. The DuckDB oracle always keeps the naive text, so every driver
-    hash-match on a fired text is an equivalence proof of the rewrite.
-
-    The memo is keyed by the owning SparkSession's id as well as
-    (schema, sf_dir), so a fresh session re-counts rebuilt data; an
-    in-session rebuild needs an explicit ``clear_size_memo()``."""
-    memo = _SF_SIZES.setdefault((id(spark), schema, sf_dir), {})
+    always; single many-edge only when the registered tables' sizes show
+    the quadratic-density regime), else the text unchanged. Row counts are
+    memoized under the session's catalog token, which names the handles
+    behind the registered views, so repeated query calls cost no extra
+    jobs and rebuilt data (a new token) is counted afresh. The DuckDB
+    oracle always keeps the naive text, so every driver hash-match on a
+    fired text is an equivalence proof of the rewrite."""
+    from lakehouse_variance_spark.plans.synth_common import catalog_memo
 
     def size_of(table: str) -> int:
-        if table not in memo:
-            memo[table] = spark.table(table).count()
-        return memo[table]
+        return catalog_memo(
+            spark, ("rows", table), lambda: spark.table(table).count()
+        )
 
     return rewrite_fanout_count(text, schema, size_of) or text
 

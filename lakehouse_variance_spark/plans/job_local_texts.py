@@ -68,7 +68,7 @@ def _register() -> None:
             # Engine-side count-product rewrite (size-gated; the
             # oracle keeps the naive text, so every driver hash
             # match on a fired text proves the rewrite exact).
-            rw = sized_rewrite(_text, 'job', spark, sf_dir)
+            rw = sized_rewrite(_text, 'job', spark)
             return synth.sql_quoted_idents(spark, rw)
 
         run.__name__ = name

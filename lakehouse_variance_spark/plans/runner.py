@@ -561,15 +561,16 @@ def register_sf_views(spark: SparkSession, sf_dir: str) -> None:
     queries use.
 
     Skips when the session's catalog-ownership token already says these
-    exact table handles own the names (synth_common._CATALOG_STATE): the
-    10 ``createOrReplaceTempView`` py4j round trips were a fixed per-text-
-    query constant. The token embeds the handle ids, so a testdata rewrite
-    (load_table's mtime-keyed memo returns fresh handles) re-registers."""
+    exact table handles own the names (synth_common.catalog_state_get):
+    the 10 ``createOrReplaceTempView`` py4j round trips were a fixed
+    per-text-query constant. The token holds the handles themselves, so a
+    testdata rewrite (load_table's stamped memo returns fresh handles)
+    re-registers, and a freed handle's recycled id() can never match."""
     from lakehouse_variance_spark.plans import synth_common as synth
     from lakehouse_variance_spark.tables import TABLE_NAMES, load_table
 
     dfs = [(name, load_table(spark, sf_dir, name)) for name in TABLE_NAMES]
-    token = ("base", sf_dir, tuple(id(df) for _, df in dfs))
+    token = ("base", sf_dir, tuple(df for _, df in dfs))
     if synth.catalog_state_get(spark) == token:
         return
     for name, df in dfs:

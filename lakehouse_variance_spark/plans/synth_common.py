@@ -13,6 +13,7 @@ tables and need the same four pieces, previously duplicated:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import re as _re
@@ -20,7 +21,8 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from lakehouse_variance_spark.tables import _app_id
+from lakehouse_variance_spark.memo import memo, session_state, stamp
+from lakehouse_variance_spark.tables import TABLE_NAMES
 
 
 def sql_quoted_idents(spark: SparkSession, text: str):
@@ -75,7 +77,14 @@ def repoint_all(sql: str, bases: tuple[str, ...]) -> str:
 
 
 def defs_fingerprint(defs: dict[str, str]) -> str:
-    blob = "\n".join(f"{k}:{v}" for k, v in defs.items())
+    return _fingerprint(tuple(defs.items()))
+
+
+@functools.lru_cache(maxsize=32)
+def _fingerprint(items: tuple[tuple[str, str], ...]) -> str:
+    # Pure in the defs text; cached because every register call keys its
+    # fast path on it and hashing ~60 KB of TPC-DS defs costs ~0.1 ms.
+    blob = "\n".join(f"{k}:{v}" for k, v in items)
     return hashlib.md5(blob.encode()).hexdigest()[:12]
 
 
@@ -91,15 +100,16 @@ def wrap_with_prelude(prelude: str, query_text: str) -> str:
 
 
 def cache_dir(cache_root: str, sf_dir: str, fingerprint: str) -> str:
+    """Content-addressed cache dir of one derived family: keyed on the
+    sf_dir, the defs fingerprint and every base table's (mtime_ns, size),
+    so a dataset rebuilt at the same path builds a fresh cache instead of
+    serving tables derived from the old data."""
+    stamps = [stamp(os.path.join(sf_dir, f"{t}.parquet")) for t in TABLE_NAMES]
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fingerprint}".encode()
+        f"{os.path.abspath(sf_dir)}|{fingerprint}|{stamps}".encode()
     ).hexdigest()[:16]
     return os.path.join(cache_root, key)
 
-
-# (session id, cache dir, table) → parquet DataFrame, so re-registration
-# after a shadowing module re-points the names is catalog-only.
-_DF_CACHE: dict[tuple[int, str, str], object] = {}
 
 # Catalog-ownership token per session: WHICH view family currently owns the
 # shared names (tpcds/ssb/tpch_ext shadow base `customer` etc.) and WHICH
@@ -109,23 +119,33 @@ _DF_CACHE: dict[tuple[int, str, str], object] = {}
 # don't redo work whose inputs didn't change). A register helper skips when
 # the session's token already equals its own; ANY code that re-points a
 # shared name outside the helpers must call `catalog_state_dirty` so the
-# next helper call does the full re-registration. Keyed by applicationId
-# (unique per session lifetime; id(spark) can be recycled by CPython).
-_CATALOG_STATE: dict[str, tuple] = {}
+# next helper call does the full re-registration. The token lives in the
+# session's own state (memo.py): temp views are per session, so is it.
 
 
 def catalog_state_get(spark: SparkSession):
-    return _CATALOG_STATE.get(_app_id(spark))
+    return session_state(spark).get("catalog")
 
 
 def catalog_state_set(spark: SparkSession, token: tuple) -> None:
-    _CATALOG_STATE[_app_id(spark)] = token
+    session_state(spark)["catalog"] = token
 
 
 def catalog_state_dirty(spark: SparkSession) -> None:
     """Invalidate the skip token (a shared view name was re-pointed
     outside the register helpers)."""
-    _CATALOG_STATE.pop(_app_id(spark), None)
+    session_state(spark).pop("catalog", None)
+
+
+def catalog_memo(spark: SparkSession, key, compute: Callable[[], object]):
+    """Memoize a value computed from the registered views, keyed by the
+    catalog token that names the handles behind them: re-registered or
+    rebuilt views get a new token and so a fresh value. With no token
+    (names re-pointed outside the helpers) nothing is memoized."""
+    token = catalog_state_get(spark)
+    if token is None:
+        return compute()
+    return memo(spark, (token, key), compute)
 
 
 def materialize_and_register(
@@ -138,8 +158,9 @@ def materialize_and_register(
     build_sql: Callable[[str], str],
     register_during_build: bool = False,
 ) -> None:
-    """Materialize every def into the fingerprint-keyed parquet cache (once
-    per sf_dir + defs version), then register all defs as temp views.
+    """Materialize every def into the content-addressed parquet cache
+    (once per sf_dir, defs version and base-file stamps; see cache_dir),
+    then register all defs as temp views.
 
     ``build_sql`` maps a def's SQL to the statement actually executed
     during the build (e.g. prefixing a digits CTE). When defs reference
@@ -150,12 +171,12 @@ def materialize_and_register(
 
     out = cache_dir(cache_root, sf_dir, defs_fingerprint(defs))
     done = os.path.join(out, "_DONE")
-    # Fast path: this exact family (cache dir) with these exact DataFrame
-    # handles already owns the catalog names — nothing to do. The token
-    # carries the handle ids, so a session whose _DF_CACHE was refreshed
-    # (or a different sf_dir / defs version) never matches stale views.
-    token = _defs_token(spark, out, defs)
-    if token is not None and catalog_state_get(spark) == token:
+    # Fast path: this family's cache dir already owns the catalog names —
+    # nothing to do. The dir is content-addressed and never rewritten in
+    # place, and its handles are memoized once per session below, so the
+    # dir alone names the handles behind the views.
+    token = ("defs", out)
+    if catalog_state_get(spark) == token:
         return
     register_sf_views(spark, sf_dir)
     if not os.path.exists(done):
@@ -232,24 +253,7 @@ def materialize_and_register(
             else:
                 raise
     for name in defs:
-        key = (id(spark), out, name)
-        df = _DF_CACHE.get(key)
-        if df is None:
-            df = spark.read.parquet(os.path.join(out, name))
-            _DF_CACHE[key] = df
+        path = os.path.join(out, name)
+        df = memo(spark, ("derived", path), lambda: spark.read.parquet(path))
         df.createOrReplaceTempView(name)
-    token = _defs_token(spark, out, defs)
-    if token is not None:
-        catalog_state_set(spark, token)
-
-
-def _defs_token(spark: SparkSession, out: str, defs: dict[str, str]):
-    """Ownership token for a registered defs family, or None when any
-    handle is not yet cached (first registration in this session)."""
-    ids = []
-    for name in defs:
-        df = _DF_CACHE.get((id(spark), out, name))
-        if df is None:
-            return None
-        ids.append(id(df))
-    return ("defs", out, tuple(ids))
+    catalog_state_set(spark, token)

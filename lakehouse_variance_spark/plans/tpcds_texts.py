@@ -71,14 +71,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakehouse_variance_spark.plans.synth_common import catalog_state_dirty
+from lakehouse_variance_spark.plans.synth_common import (
+    catalog_memo,
+    catalog_state_dirty,
+)
 from lakehouse_variance_spark.plans.tpcds_schema import (
     oracle_sql_for,
     register_tpcds_views,
 )
 from lakehouse_variance_spark.registry import register
 from lakehouse_variance_spark.session import env_int
-from lakehouse_variance_spark.tables import _app_id
 
 TPCDS_TEXTS: dict[str, str] = {}
 
@@ -4991,17 +4993,17 @@ LIMIT 100
 # Harness-level runtime fact prunes — the r11 q72 transitive-date-prune
 # pattern, generalized (r12, guide §3.2/§6).  Each entry shadows fact views
 # with a filter PROVABLY implied by the query's own WHERE clause through its
-# dimension equi-joins: the dimension keys are collected once per (session,
-# sf_dir) — a bounded driver list, the scheduler-inputs precedent — and fact
-# rows outside the set cannot satisfy the query's own join+filter chain, so
-# results are unchanged (the oracle runs the pure text and the hash gate
-# proves it).  This is the manual form of the runtime filter Catalyst's
-# bloom-filter injection (SPARK-32268) declines to build here (no table
-# stats; filtered-dimension size estimates over its thresholds): the key set
-# reaches the parquet scan as PushedFilters — a BETWEEN when the sk run is
-# contiguous (row-group min/max skipping), an In list otherwise — where the
-# before-plans (plans/r12/*_before.txt) show full-table fact scans with
-# IsNotNull-only pushdown.
+# dimension equi-joins: the dimension keys are collected once per session
+# and catalog token — a bounded driver list, the scheduler-inputs precedent —
+# and fact rows outside the set cannot satisfy the query's own join+filter
+# chain, so results are unchanged (the oracle runs the pure text and the
+# hash gate proves it).  This is the manual form of the runtime filter
+# Catalyst's bloom-filter injection (SPARK-32268) declines to build here (no
+# table stats; filtered-dimension size estimates over its thresholds): the
+# key set reaches the parquet scan as PushedFilters — a BETWEEN when the sk
+# run is contiguous (row-group min/max skipping), an In list otherwise —
+# where the before-plans (plans/r12/*_before.txt) show full-table fact scans
+# with IsNotNull-only pushdown.
 #
 # Query texts stay verbatim; each dim_sql mirrors the query's own dimension
 # predicates literally (literal drift would over- or under-prune and the
@@ -5012,10 +5014,6 @@ LIMIT 100
 # catalog_state_dirty, no full re-registration for the next query (r11 paid
 # that after q72; r12 drops it).
 #
-# (application id, sf_dir, dim_sql) -> (lo, hi, None) for a contiguous key
-# run, else (None, None, sorted values).
-_PRUNE_KEYS: dict[tuple[str, str, str], tuple] = {}
-
 # query -> ((dim_sql, ((view, fact_column), ...)), ...)
 _FACT_PRUNES: dict[str, tuple] = {
     # q4: every year_total consumer pins dyear IN (2001, 2001+1); the CTE's
@@ -5172,49 +5170,42 @@ _PRUNE_MIN_FACT_BYTES = env_int("SPARK_GRAFT_PRUNE_MIN_BYTES", 16 << 20)
 # 4096 sits between the measured-fine 2.5k and the measured-disaster 47k;
 # the analog of Spark's own bloom-filter maxNumItems bound.
 _PRUNE_MAX_KEYS = env_int("SPARK_GRAFT_PRUNE_MAX_KEYS", 4096)
-_VIEW_BYTES: dict[tuple[str, str, str], int] = {}
 
 
-def _view_bytes(spark: SparkSession, sf_dir: str, view: str) -> int:
-    key = (_app_id(spark), sf_dir, view)
-    got = _VIEW_BYTES.get(key)
-    if got is None:
-        try:
-            got = int(
-                str(
-                    spark.table(view)
-                    ._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:
-            # Unknown estimate: fail open (apply the prune) for this call
-            # only; the next call asks Catalyst again.
-            return 1 << 62
-        _VIEW_BYTES[key] = got
-    return got
+def _view_bytes(spark: SparkSession, view: str) -> int:
+    """Catalyst's size estimate for a registered view, memoized under the
+    catalog token. Fails open: an unknown estimate applies the prune for
+    this call only (nothing is memoized), and the next call asks again."""
+
+    def estimate() -> int:
+        plan = spark.table(view)._jdf.queryExecution().optimizedPlan()
+        return int(str(plan.stats().sizeInBytes()))
+
+    try:
+        return catalog_memo(spark, ("view_bytes", view), estimate)
+    except Exception:
+        return 1 << 62
 
 
-def _prune_keys(spark: SparkSession, sf_dir: str, dim_sql: str) -> tuple:
-    key = (_app_id(spark), sf_dir, dim_sql)
-    got = _PRUNE_KEYS.get(key)
-    if got is None:
+def _prune_keys(spark: SparkSession, dim_sql: str) -> tuple:
+    """The dimension keys ``dim_sql`` selects, memoized under the catalog
+    token: (lo, hi, None) for a contiguous key run, else (None, None,
+    sorted values)."""
+
+    def collect() -> tuple:
         vals = sorted(r[0] for r in spark.sql(dim_sql).collect())
         if vals and vals[-1] - vals[0] + 1 == len(vals):
             # Contiguous key run (the date_dim surrogate keys are ordinal):
             # a two-sided range predicate, which parquet row-group min/max
             # stats can skip on, instead of a hundreds-long In list.
-            got = (vals[0], vals[-1], None)
-        else:
-            got = (None, None, vals)
-        _PRUNE_KEYS[key] = got
-    return got
+            return (vals[0], vals[-1], None)
+        return (None, None, vals)
+
+    return catalog_memo(spark, ("prune_keys", dim_sql), collect)
 
 
 def _apply_fact_prunes(
-    spark: SparkSession, sf_dir: str, prunes: tuple
+    spark: SparkSession, prunes: tuple
 ) -> dict[str, DataFrame]:
     """Shadow each target view with the prune predicate(s); returns the
     captured ORIGINAL DataFrames so the caller can restore the catalog
@@ -5226,11 +5217,11 @@ def _apply_fact_prunes(
         gated = [
             (view, col)
             for view, col in targets
-            if _view_bytes(spark, sf_dir, view) >= _PRUNE_MIN_FACT_BYTES
+            if _view_bytes(spark, view) >= _PRUNE_MIN_FACT_BYTES
         ]
         if not gated:
             continue  # don't even collect the dimension keys
-        lo, hi, vals = _prune_keys(spark, sf_dir, dim_sql)
+        lo, hi, vals = _prune_keys(spark, dim_sql)
         if vals is not None and len(vals) > _PRUNE_MAX_KEYS:
             continue  # an In list this long costs more than it prunes
         for view, col in gated:
@@ -5278,7 +5269,7 @@ def _register_tpcds_texts() -> None:
             prunes = _FACT_PRUNES.get(_name)
             if prunes is None:
                 return spark.sql(_text)
-            restores = _apply_fact_prunes(spark, sf_dir, prunes)
+            restores = _apply_fact_prunes(spark, prunes)
             try:
                 # spark.sql analyzes eagerly — the shadowed view plans are
                 # inlined into the returned Dataset here...

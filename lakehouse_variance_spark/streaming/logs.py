@@ -28,22 +28,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_variance_spark.memo import memo, session_state
 from lakehouse_variance_spark.registry import register
-from lakehouse_variance_spark.tables import load_table
+from lakehouse_variance_spark.tables import _pin_load_confs, load_table
 
 _MEMORY_SINK_IDS = itertools.count()
-
-# File-stream sources need a user-supplied schema; reading the footer once
-# per (session, path) instead of per source saves a full batch-scan setup
-# every time a query builds a second source over the same table.
-_SCHEMA_CACHE: dict[tuple[int, str], object] = {}
-
-
-def _events_schema(spark: SparkSession, path: str):
-    key = (id(spark), path)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
 
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,11 +40,17 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanos→timestamp normalization as the batch loader."""
     # Zero-offset NTZ<->TZ casts + nanosAsLong; pinned once per session
     # (see tables._pin_load_confs for the rationale).
-    from lakehouse_variance_spark.tables import _pin_load_confs
-
     _pin_load_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _events_schema(spark, path)
+    # File-stream sources need a user-supplied schema; the footer is read
+    # once per session and path (re-read when the file changes) instead of
+    # per source, saving a batch-scan setup per extra source.
+    schema = memo(
+        spark,
+        ("schema", path),
+        lambda: spark.read.parquet(path).schema,
+        (path,),
+    )
     _note_stream_source(spark, path)  # feeds the state-store sizing below
     # The file stream source needs a DIRECTORY (its basePath). Two layouts
     # exist: events.parquet as a directory of part-files (Spark-written
@@ -107,7 +102,6 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # $SPARK_GRAFT_STREAM_PARTITIONS explicitly; the env knob always wins.
 _STREAM_STATE_TARGET_BYTES = 256 << 20  # ~256 MB of state per store
 _STREAM_STATE_MIN, _STREAM_STATE_MAX = 2, 4096
-_SOURCE_BYTES: dict[int, int] = {}
 
 
 def _note_stream_source(spark: SparkSession, path: str) -> None:
@@ -122,9 +116,9 @@ def _note_stream_source(spark: SparkSession, path: str) -> None:
             )
         else:
             total = os.path.getsize(path)
-        _SOURCE_BYTES[id(spark)] = total
+        session_state(spark)["stream_source_bytes"] = total
     except OSError:
-        _SOURCE_BYTES.pop(id(spark), None)
+        session_state(spark).pop("stream_source_bytes", None)
 
 
 def _stream_state_partitions(spark: SparkSession) -> int:
@@ -134,7 +128,7 @@ def _stream_state_partitions(spark: SparkSession) -> int:
     env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
     if env:
         return int(env)
-    src = _SOURCE_BYTES.get(id(spark), 0)
+    src = session_state(spark).get("stream_source_bytes", 0)
     derived = -(-src // _STREAM_STATE_TARGET_BYTES)  # ceil div
     return max(_STREAM_STATE_MIN, min(_STREAM_STATE_MAX, derived))
 

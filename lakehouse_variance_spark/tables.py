@@ -12,6 +12,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_variance_spark.memo import memo, session_state
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -38,49 +40,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _NANOS_TS_COLUMNS = {"events": ("ts",)}
 
 
-# Session-scoped table-handle memo: spark.read.parquet re-lists the path
-# and re-reads footers for schema inference on EVERY call, and the suites
-# call load_table 2-10x per query — a pure metadata constant that a real
-# deployment amortizes in its catalog (Spark caches catalog-table file
-# listings; see spark.sql.hive.filesourcePartitionFileCacheSize). The memo
-# keys on (applicationId, path, mtime): applicationId is unique per session
-# lifetime (the _Q72_WEEK_SKS precedent — id(spark) can be recycled by
-# CPython), and the path mtime invalidates the handle when a test rewrites
-# the same directory (a cached InMemoryFileIndex would otherwise pin the
-# OLD file list). The cached object is a LAZY plan — every action still
-# scans parquet; only the schema/listing metadata is reused.
-_TABLE_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
-def _app_id(spark: SparkSession) -> str:
-    """applicationId memoized on the context OBJECT: the id is immutable
-    per context, but the property is a py4j round trip per read, and
-    load_table keys its memo on it for every call of every query. The
-    attribute dies with the Python object, so there is no id()-recycling
-    hazard (the _Q72_WEEK_SKS precedent)."""
-    sc = spark.sparkContext
-    app = getattr(sc, "_lvs_app_id", None)
-    if app is None:
-        app = sc.applicationId
-        sc._lvs_app_id = app
-    return app
-
-
-# Sessions whose load-path confs are already pinned, by applicationId. The
-# two conf.set calls below are py4j round trips paid on EVERY load_table
-# call (2-10 per query) for values that never change within a session —
-# VERDICT r11 next-round #8's largest remaining aggregate constant. A
-# hostile session (non-UTC timezone, nanosAsLong unset) is still fixed by
-# the FIRST load in that session; nothing in the engine flips these confs
-# afterwards (run_to_memory/run_to_parquet restore what they touch).
-_CONF_PINNED: set[str] = set()
-
-
-def _pin_load_confs(spark: SparkSession) -> str:
-    """Pin nanosAsLong + UTC timezone once per session; returns the
-    applicationId so callers don't pay the round trip twice."""
-    app = _app_id(spark)
-    if app not in _CONF_PINNED:
+def _pin_load_confs(spark: SparkSession) -> None:
+    """Pin nanosAsLong + UTC timezone once per session: the two conf.set
+    calls are py4j round trips, and load_table runs 2-10 times per query.
+    A hostile session (non-UTC timezone, nanosAsLong unset) is fixed by
+    its FIRST load, and nothing in the engine flips these confs afterwards
+    (run_to_memory/run_to_parquet restore what they touch)."""
+    state = session_state(spark)
+    if "load_confs_pinned" not in state:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Queries casting TIMESTAMP_NTZ <-> TIMESTAMP (as-of gaps,
         # watermarks) assume a zero-offset session. The driver supplies its
@@ -88,22 +55,10 @@ def _pin_load_confs(spark: SparkSession) -> str:
         # query loads through — a DST-straddling local zone would silently
         # shift those casts.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        _CONF_PINNED.add(app)
-    return app
+        state["load_confs_pinned"] = True
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. Parquet scan → vectorized reader, pushdown-capable."""
-    app = _pin_load_confs(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0  # nonexistent/remote path: let the reader raise/resolve
-    key = (app, path, mtime)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     for col in _NANOS_TS_COLUMNS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
@@ -112,8 +67,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(
                 col, F.timestamp_micros(F.expr(f"`{col}` div 1000"))
             )
-    _TABLE_CACHE[key] = df
     return df
+
+
+# Table handles are memoized per session (memo.py): spark.read.parquet
+# re-lists the path and re-reads footers for schema inference on EVERY
+# call, and the suites call load_table 2-10x per query. The key is the
+# path, stamped by the file's (mtime_ns, size), so a rewrite of the same
+# path yields a fresh handle (a cached InMemoryFileIndex would otherwise
+# pin the OLD file list). The handle is a LAZY plan: every action still
+# scans parquet; only the schema/listing metadata is reused.
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table. Parquet scan → vectorized reader, pushdown-capable."""
+    _pin_load_confs(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return memo(
+        spark, ("table", path), lambda: _read_table(spark, path, name), (path,)
+    )
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

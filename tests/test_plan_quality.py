@@ -12,6 +12,7 @@ import re
 import pytest
 
 from lakehouse_variance_spark import registry
+from lakehouse_variance_spark.plans import tpcds_texts
 from tests.conftest import SF_DIR
 
 registry.load_all()
@@ -368,7 +369,7 @@ def test_fact_prune_failure_restores_shadowed_views(spark, monkeypatch):
         return spark.table(first).count()
 
     full = rows()
-    restores = tpcds_texts._apply_fact_prunes(spark, SF_DIR, prunes)
+    restores = tpcds_texts._apply_fact_prunes(spark, prunes)
     pruned = rows()
     tpcds_texts._restore_views(restores)
     assert pruned < full, "the prune must drop rows for this check to bite"
@@ -382,7 +383,7 @@ def test_fact_prune_failure_restores_shadowed_views(spark, monkeypatch):
 
     monkeypatch.setattr(spark, "table", failing_table)
     with pytest.raises(RuntimeError, match="injected"):
-        tpcds_texts._apply_fact_prunes(spark, SF_DIR, prunes)
+        tpcds_texts._apply_fact_prunes(spark, prunes)
     monkeypatch.setattr(spark, "table", table)
     assert rows() == full, "first view left pruned after the failure"
 
@@ -391,24 +392,71 @@ def test_view_bytes_does_not_memoize_failed_estimate(spark, monkeypatch):
     """A failed size estimate fails open for that call only; it must not
     pin the 1 << 62 sentinel for the rest of the session."""
     import lakehouse_variance_spark.plans.tpcds_texts as tpcds_texts
+    from lakehouse_variance_spark.memo import session_state
+    from lakehouse_variance_spark.plans.synth_common import catalog_state_get
     from lakehouse_variance_spark.plans.tpcds_schema import (
         register_tpcds_views,
     )
 
     register_tpcds_views(spark, SF_DIR)
-    monkeypatch.setattr(tpcds_texts, "_VIEW_BYTES", {})
+    state = session_state(spark)
+    key = (catalog_state_get(spark), ("view_bytes", "store_sales"))
+    state.pop(key, None)
     table = spark.table
 
     def broken(name):
         raise RuntimeError("no estimate")
 
     monkeypatch.setattr(spark, "table", broken)
-    assert tpcds_texts._view_bytes(spark, SF_DIR, "store_sales") == 1 << 62
-    assert tpcds_texts._VIEW_BYTES == {}
+    assert tpcds_texts._view_bytes(spark, "store_sales") == 1 << 62
+    assert key not in state
     monkeypatch.setattr(spark, "table", table)
-    got = tpcds_texts._view_bytes(spark, SF_DIR, "store_sales")
+    got = tpcds_texts._view_bytes(spark, "store_sales")
     assert 0 < got < 1 << 62
-    assert list(tpcds_texts._VIEW_BYTES.values()) == [got]
+    assert state[key][1] == got
+
+
+def _canon_rows(df) -> list:
+    return sorted(
+        (
+            tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+            for r in df.collect()
+        ),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("name", sorted(tpcds_texts._FACT_PRUNES))
+def test_fact_prune_returns_the_pure_texts_rows(spark, monkeypatch, name):
+    """With the size gate at 0 every prune fires at tier-1 scale, where an
+    oracle can check it: the pruned query must return exactly the rows of
+    the verbatim text. tpcds_q37's item slice is empty here, so its
+    shadows are the F.lit(False) case."""
+    from lakehouse_variance_spark.plans.tpcds_schema import (
+        register_tpcds_views,
+    )
+
+    monkeypatch.setattr(tpcds_texts, "_PRUNE_MIN_FACT_BYTES", 0)
+    register_tpcds_views(spark, SF_DIR)
+    pure = _canon_rows(spark.sql(tpcds_texts.TPCDS_TEXTS[name]))
+    shadowed = []
+    apply = tpcds_texts._apply_fact_prunes
+
+    def spy(spark_, prunes):
+        restores = apply(spark_, prunes)
+        shadowed.extend(restores)
+        return restores
+
+    monkeypatch.setattr(tpcds_texts, "_apply_fact_prunes", spy)
+    pruned = _canon_rows(registry.QUERIES[name](spark, SF_DIR))
+    assert shadowed, f"{name}: no fact view was pruned"
+    if name == "tpcds_q37":
+        keys = [
+            tpcds_texts._prune_keys(spark, dim_sql)
+            for dim_sql, _ in tpcds_texts._FACT_PRUNES[name]
+        ]
+        assert (None, None, []) in keys
+    assert pruned == pure
 
 
 def test_ssb_flights_broadcast_all_dimensions(spark):

@@ -334,11 +334,13 @@ def test_stream_state_partitions_derive_from_source_volume(spark, monkeypatch):
     """The state-store count default derives from source volume (ceil of
     bytes/256MB clamped to [2, 4096]); $SPARK_GRAFT_STREAM_PARTITIONS
     always wins (the deployment's state-horizon knob)."""
+    from lakehouse_variance_spark.memo import session_state
     from lakehouse_variance_spark.streaming import logs as slogs
 
     monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
-    key = id(spark)
-    old = slogs._SOURCE_BYTES.get(key)
+    state = session_state(spark)
+    key = "stream_source_bytes"
+    old = state.get(key)
     try:
         for src_bytes, want in (
             (0, 2),                      # no source recorded: floor
@@ -346,20 +348,21 @@ def test_stream_state_partitions_derive_from_source_volume(spark, monkeypatch):
             (1 << 30, 4),                # 1 GB -> 4 stores of 256 MB
             (1 << 50, 4096),             # petabyte source: capped
         ):
-            slogs._SOURCE_BYTES[key] = src_bytes
+            state[key] = src_bytes
             assert slogs._stream_state_partitions(spark) == want, src_bytes
         monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "7")
         assert slogs._stream_state_partitions(spark) == 7
     finally:
         if old is None:
-            slogs._SOURCE_BYTES.pop(key, None)
+            state.pop(key, None)
         else:
-            slogs._SOURCE_BYTES[key] = old
+            state[key] = old
 
 
 def test_streaming_events_records_source_bytes(spark):
     from tests.conftest import SF_DIR
+    from lakehouse_variance_spark.memo import session_state
     from lakehouse_variance_spark.streaming import logs as slogs
 
     slogs.streaming_events(spark, SF_DIR)
-    assert slogs._SOURCE_BYTES.get(id(spark), 0) > 0
+    assert session_state(spark).get("stream_source_bytes", 0) > 0
