@@ -15,7 +15,7 @@ import sys
 import time
 
 from lakehouse_variance_spark import registry
-from lakehouse_variance_spark.session import build_session
+from lakehouse_variance_spark.session import build_session, codegen_compiles
 
 # Headline set: one per operator family — aggregation, multiway join, window,
 # full-outer cumulative, as-of join, top-k, set op, correlated subquery,
@@ -193,9 +193,12 @@ def main() -> None:
 
     # Warm-up pass: the first execution of each query pays Janino codegen +
     # JVM JIT compilation of its generated classes (several seconds for the
-    # widest plans) — one-time session costs, not per-query throughput. The
-    # timed pass below measures steady state, which is what scales to a
-    # long-running cluster.
+    # widest plans). They stay one-time costs only while the generated
+    # classes stay cached: build_session sizes the codegen cache to hold
+    # all 99 queries' classes (Spark's 100-entry default recompiled ~1,520
+    # per pass). The timed pass below measures steady state, which is what
+    # scales to a long-running cluster; the codegen line on stderr shows
+    # how many classes it still compiled.
     for name in headline:
         drain(registry.QUERIES[name](spark, sf_dir))
 
@@ -223,6 +226,7 @@ def main() -> None:
     except Exception:
         calib["git_head"] = None
 
+    compiles0 = codegen_compiles(spark)
     timings: dict[str, float] = {}
     for name in headline:
         fn = registry.QUERIES[name]
@@ -231,6 +235,8 @@ def main() -> None:
         n = drain(df)  # drain (run_workload.py:38-44 drains the cursor)
         timings[name] = round(time.perf_counter() - start, 4)
         print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
+    print(f"# codegen: {codegen_compiles(spark) - compiles0} classes compiled "
+          "in the timed pass", file=sys.stderr)
 
     total = round(sum(timings.values()), 4)
     # Isolation runs (SPARK_GRAFT_ONLY) report a DISTINCT metric name and

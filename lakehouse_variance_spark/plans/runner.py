@@ -33,6 +33,8 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from lakehouse_variance_spark.session import codegen_compiles
+
 SENTINEL = -1  # reference run_workload.py:62-64 failure marker
 
 
@@ -67,10 +69,15 @@ def run_query(
     the budget expires, so a hung query yields the ``-1`` sentinel record
     (the reference's SF_1000 logs show 93-98/99 queries completing — the
     rest are exactly these sentinel rows) instead of stalling the run.
+
+    ``codegen_compiles`` counts the classes Janino compiled while the query
+    ran: 0 when its generated code was still cached. The counter is
+    JVM-wide, so concurrent streams' records include each other's compiles.
     """
     import threading
 
     start_stamp = _utc_now()
+    compiles0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     sc = spark.sparkContext
     done = threading.Event()
@@ -134,6 +141,7 @@ def run_query(
             "execution_s": t1 - t_planned,
             "resource_waiting_s": 0.0,
             "rows_out": rows_out,
+            "codegen_compiles": codegen_compiles(spark) - compiles0,
         }
     except Exception as exc:  # noqa: BLE001 — sentinel instead of abort
         return {

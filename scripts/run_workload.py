@@ -164,9 +164,12 @@ def main() -> None:
     ap.add_argument("--warmup", action="store_true",
                     help="run one UNRECORDED battery pass before attempt "
                     "1 so recorded attempts measure steady state (Janino "
-                    "codegen + JVM JIT of each plan are one-time session "
-                    "costs; without this, attempt 1 pollutes the 5-run "
-                    "variance study — VERDICT r8 item 5)")
+                    "codegen + JVM JIT of each plan are paid once per "
+                    "session while build_session's codegen cache holds the "
+                    "battery's classes, so without this, attempt 1 pollutes "
+                    "the 5-run variance study — VERDICT r8 item 5; each "
+                    "log record's codegen_compiles shows what a query "
+                    "still compiled)")
     ap.add_argument("--no-calibrate", action="store_true",
                     help="skip the host-speed calibration micro-probe")
     args = ap.parse_args()

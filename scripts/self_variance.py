@@ -80,6 +80,22 @@ def main() -> None:
         .toPandas()
     )
 
+    if "codegen_compiles" in log.columns:
+        per_run = log.groupBy("run").agg(F.sum("codegen_compiles")).collect()
+        codegen = (
+            "Generated classes compiled per recorded attempt "
+            "(`codegen_compiles`): "
+            + ", ".join(f"{r[0]} {r[1]}" for r in sorted(per_run)) + "."
+        )
+    else:
+        codegen = (
+            "These logs were captured with Spark's 100-entry codegen "
+            "cache, before `build_session` sized it to the engine's "
+            "classes: the warm-up pass did not keep the generated code "
+            "compiled, so every recorded attempt recompiled its queries' "
+            "classes (Janino codegen, then interpreted code until the JIT "
+            "caught up) inside the recorded runtimes."
+        )
     s = summary.iloc[0]
     lines = [
         "# SELF_VARIANCE — 5-run variance study of this engine, "
@@ -88,10 +104,10 @@ def main() -> None:
         f"Logs: `{args.log_dir}/Workload_log_BASE_{{1..5}}.ndjson` "
         "(verbatim 99-query TPC-DS battery at sf0.1, local[32]), written "
         "by `scripts/run_workload.py --battery tpcds --attempts 5 "
-        "--warmup` — one UNRECORDED warm-up pass precedes attempt 1 so "
-        "every recorded attempt measures steady state (round 8's q1 CV "
-        "149.8% was attempt-1 Janino/JIT warm-up pollution; the "
-        "reference's 5-run protocol assumes a warm warehouse). Host "
+        "--warmup` — one UNRECORDED warm-up pass precedes attempt 1 "
+        "(round 8's q1 CV 149.8% was attempt-1 Janino/JIT warm-up "
+        "pollution; the reference's 5-run protocol assumes a warm "
+        f"warehouse). {codegen} Host "
         f"speed at capture time is pinned in `{args.log_dir}/"
         "calibration.json`. Summarized END-TO-END by the engine's own "
         "trace operators "

@@ -13,7 +13,7 @@ import pytest
 
 from lakehouse_variance_spark import registry
 from lakehouse_variance_spark.plans import tpcds_texts
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MEDIUM
 
 registry.load_all()
 
@@ -426,18 +426,30 @@ def _canon_rows(df) -> list:
     )
 
 
-@pytest.mark.parametrize("name", sorted(tpcds_texts._FACT_PRUNES))
-def test_fact_prune_returns_the_pure_texts_rows(spark, monkeypatch, name):
+@pytest.mark.parametrize(
+    "name, sf_dir",
+    [pytest.param(q, SF_DIR, id=q) for q in sorted(tpcds_texts._FACT_PRUNES)]
+    # sf0.001 misses some over-prunes (cutting tpcds_q4's key set to
+    # d_year IN (2001) still returns the same rows there); sf0.01 does not.
+    + [
+        pytest.param(q, SF_DIR_MEDIUM, id=f"{q}-sf0.01",
+                     marks=pytest.mark.slow)
+        for q in sorted(tpcds_texts._FACT_PRUNES)
+    ],
+)
+def test_fact_prune_returns_the_pure_texts_rows(
+    spark, monkeypatch, name, sf_dir
+):
     """With the size gate at 0 every prune fires at tier-1 scale, where an
     oracle can check it: the pruned query must return exactly the rows of
-    the verbatim text. tpcds_q37's item slice is empty here, so its
+    the verbatim text. tpcds_q37's item slice is empty at sf0.001, so its
     shadows are the F.lit(False) case."""
     from lakehouse_variance_spark.plans.tpcds_schema import (
         register_tpcds_views,
     )
 
     monkeypatch.setattr(tpcds_texts, "_PRUNE_MIN_FACT_BYTES", 0)
-    register_tpcds_views(spark, SF_DIR)
+    register_tpcds_views(spark, sf_dir)
     pure = _canon_rows(spark.sql(tpcds_texts.TPCDS_TEXTS[name]))
     shadowed = []
     apply = tpcds_texts._apply_fact_prunes
@@ -448,15 +460,41 @@ def test_fact_prune_returns_the_pure_texts_rows(spark, monkeypatch, name):
         return restores
 
     monkeypatch.setattr(tpcds_texts, "_apply_fact_prunes", spy)
-    pruned = _canon_rows(registry.QUERIES[name](spark, SF_DIR))
+    pruned = _canon_rows(registry.QUERIES[name](spark, sf_dir))
     assert shadowed, f"{name}: no fact view was pruned"
-    if name == "tpcds_q37":
+    if name == "tpcds_q37" and sf_dir == SF_DIR:
         keys = [
             tpcds_texts._prune_keys(spark, dim_sql)
             for dim_sql, _ in tpcds_texts._FACT_PRUNES[name]
         ]
         assert (None, None, []) in keys
     assert pruned == pure
+
+
+@pytest.mark.parametrize("name", sorted(tpcds_texts._FACT_PRUNES))
+def test_fact_prune_predicates_come_from_the_text(name):
+    """Each prune's dimension predicate is copied by hand from the verbatim
+    text. Every literal and column it filters on must appear in
+    TPCDS_TEXTS[name], so a re-drawn text (new years, colors, price
+    bands) fails here instead of silently over- or under-pruning."""
+    text = tpcds_texts.TPCDS_TEXTS[name]
+    for dim_sql, _ in tpcds_texts._FACT_PRUNES[name]:
+        where = dim_sql.split(" WHERE ", 1)[1]
+        strings = re.findall(r"'[^']*'", where)
+        bare = re.sub(r"'[^']*'", " ", where)
+        numbers = re.findall(r"(?<![\w.])\d+(?:\.\d+)?(?![\w.])", bare)
+        columns = re.findall(r"\b[a-z]+_[a-z_]+\b", bare)
+        assert strings or numbers, dim_sql
+        for lit in strings:
+            assert lit in text, f"{name}: {lit} of {dim_sql!r} not in text"
+        for lit in numbers:
+            assert re.search(rf"(?<![\w.]){re.escape(lit)}(?![\w.])", text), (
+                f"{name}: {lit} of {dim_sql!r} not in text"
+            )
+        for col in columns:
+            assert re.search(rf"\b{col}\b", text), (
+                f"{name}: {col} of {dim_sql!r} not in text"
+            )
 
 
 def test_ssb_flights_broadcast_all_dimensions(spark):

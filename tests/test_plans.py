@@ -35,6 +35,20 @@ def test_run_workload_log_roundtrip(spark, tmp_path):
     assert rows["2"]["runtime_s"] is None
 
 
+def test_run_workload_logs_codegen_compiles(spark, tmp_path):
+    """Each record counts the classes Janino compiled for its query: the
+    first run of a new plan compiles, a repeat finds its code cached. The
+    trace loader reads the field as one more column."""
+    queries = [("q1", "SELECT id * 730917 AS x FROM range(50) WHERE id % 7 = 3")]
+    first = runner.run_workload(spark, queries, log_dir=tmp_path, attempt=1)
+    again = runner.run_workload(spark, queries, log_dir=tmp_path, attempt=2)
+    assert first[0]["codegen_compiles"] > 0
+    assert again[0]["codegen_compiles"] == 0
+    df = load_workload_logs(spark, str(tmp_path))
+    got = {r["run"]: r["codegen_compiles"] for r in df.collect()}
+    assert got == {"Run 1": first[0]["codegen_compiles"], "Run 2": 0}
+
+
 def test_run_query_timeout_watchdog_kills_hung_query(spark):
     """The per-query budget (reference config.py:6's 5-minute kill):
     a deliberately huge cross-product is cancelled by the job-group
