@@ -166,8 +166,8 @@ def main() -> None:
     # SPARK_GRAFT_FORCE_DRAIN=1 provides a secondary, materialization-
     # honest series: every output column is forced through
     # bit_xor(xxhash64(*cols)) before the count (the cost of producing
-    # every byte, like a client cursor drain). Forced runs persist to
-    # BENCH_FORCED.json so the two series can never be confused.
+    # every byte, like a client cursor drain). Forced runs report
+    # the "_forced_drain" metric so the two series can never be confused.
     force_drain = os.environ.get("SPARK_GRAFT_FORCE_DRAIN") == "1"
 
     def drain(df) -> int:
@@ -239,38 +239,15 @@ def main() -> None:
           "in the timed pass", file=sys.stderr)
 
     total = round(sum(timings.values()), 4)
-    # Isolation runs (SPARK_GRAFT_ONLY) report a DISTINCT metric name and
-    # persist to BENCH_ISOLATE.json, never BENCH_SELF.json — a partial-suite
-    # total under the full-suite metric name would read as a phantom speedup
-    # when BENCH files are diffed across rounds (ADVICE r7).
+    # Isolation runs (SPARK_GRAFT_ONLY) and forced drains report DISTINCT
+    # metric names — a partial-suite total under the full-suite metric
+    # name would read as a phantom speedup when BENCH files are diffed
+    # across rounds (ADVICE r7). The metric name and ``sf`` say which run
+    # produced a line, so every run writes the same gitignored file.
     metric = "headline_subset_runtime" if only else "headline_suite_runtime"
     if force_drain:
         metric += "_forced_drain"
-    # BENCH_SELF.json is the authoritative full-suite sf0.1 artifact the
-    # rounds compare; a subset run goes to BENCH_ISOLATE.json and an
-    # off-scale smoke (e.g. SPARK_GRAFT_SF_DIR=sf0.01) to BENCH_SMOKE.json
-    # so neither can clobber the committed sf0.1 numbers (VERDICT r9 #2's
-    # artifact-divergence class).
-    if only:
-        self_json = "BENCH_ISOLATE.json"
-    elif force_drain:
-        self_json = "BENCH_FORCED.json"
-    elif sf == 0.1:
-        # The COMMITTED artifact slot is opt-in (session workflow sets
-        # SPARK_GRAFT_BENCH_COMMIT=1 for the canonical end-of-round run,
-        # committed with the producing HEAD). Unattended invocations —
-        # the driver benches AFTER the end-of-round snapshot commit —
-        # land in the gitignored _driver slot instead, so they can never
-        # leave the committed BENCH_SELF.json dirty/diverged from the
-        # tree that produced it (VERDICT r9 #4 / r10 wrong #1). The
-        # driver's own record is BENCH_r{N}.json, parsed from the
-        # printed line — nothing is lost by not committing its copy.
-        if os.environ.get("SPARK_GRAFT_BENCH_COMMIT") == "1":
-            self_json = "BENCH_SELF.json"
-        else:
-            self_json = "BENCH_SELF_driver.json"
-    else:
-        self_json = "BENCH_SMOKE.json"
+    self_json = "BENCH_LAST.json"
     line = json.dumps(
         {
             "metric": metric,

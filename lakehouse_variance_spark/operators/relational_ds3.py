@@ -1,9 +1,12 @@
-"""Fifth batch of TPC-DS-shaped relational queries.
+"""Exact-cents TPC-DS-shaped relational queries.
 
 The reference executes the 99 TPC-DS queries verbatim
-(`docker/trino-client/src/run_workload.py:38`); this batch re-creates the
-remaining distinctive plan shapes on the driver's TPC-H-ish tables:
+(`docker/trino-client/src/run_workload.py:38`), and so does
+``plans/tpcds_texts.py``. The DataFrame rewrites kept here run on the
+TPC-H-ish test tables and are in the bench's headline set:
 
+* q17     — three-way fact join with per-group dispersion statistics and a
+  coefficient-of-variation filter (`docker/trino-client/queries/q17.sql`);
 * q92     — "excess discount": lineitems whose discount exceeds 1.3x the
   per-part average discount within a date window, summed
   (`docker/trino-client/queries/q92.sql:1-20`, the correlated
@@ -11,24 +14,24 @@ remaining distinctive plan shapes on the driver's TPC-H-ish tables:
 * q25/q29 — returned-then-rebought: a fact self-join pairing each returned
   line with a later non-returned purchase of the same (customer, part)
   (`queries/q29.sql:1-30`, store_sales x store_returns x catalog_sales);
-* q21/q40 — before/after pivot-date quantity ratio band per group
-  (`queries/q21.sql:15-30`, ``inv_before/inv_after BETWEEN 2/3 AND 3/2``);
-* q72     — fulfilment lag: lines shipping more than 60 days after the
-  order date, per order priority (`queries/q72.sql:20-25`,
-  ``d_date > d_date + 5 days`` cross-date condition);
 * q75     — year-over-year decline WITH returns netted out
   (`queries/q75.sql:1-40`, ``sales_cnt - coalesce(return_cnt, 0)``
   unioned across channels, prev/curr self-join on strict decline);
-* q37/q82 — items in a retail-price band with activity in a 60-day window,
-  distinct-order counts (`queries/q82.sql:1-15`,
-  ``i_current_price BETWEEN 62 AND 92`` + date range + count distinct).
+* q376    — the generated workload's multiplicative LEFT-join fan-out,
+  with partial COUNT pushed below the joins.
 
-Determinism (same discipline as relational_ds.py / relational_ds2.py):
-money/quantity aggregates accumulate exact integer cents; discounts are
-2-decimal so integer basis points (``round(d*100)``) are exact; every
-threshold predicate is a cross-multiplied integer comparison, never a
-float quotient; the only doubles produced are single IEEE divisions of
-exact int64 values (exact below 2^53, engine-stable).
+Determinism (same discipline as relational_ds2.py): money/quantity
+aggregates accumulate exact integer cents; discounts are 2-decimal so
+integer basis points (``round(d*100)``) are exact; every threshold
+predicate is a cross-multiplied integer comparison, never a float
+quotient; the only doubles produced are fixed chains of single IEEE ops
+on exact int64 values (exact below 2^53, engine-stable). Two gotchas
+drive this design: round(avg()) is not engine-stable (Spark HALF_UPs the
+shortest decimal rendering of the double, DuckDB rounds the binary value
+— round(0.285, 2) differs), and bigint*bigint is not overflow-safe under
+Spark's ANSI mode (throws where DuckDB silently widens to HUGEINT), so
+products are kept inside exact-int ranges or cast to double before
+multiplying.
 """
 
 from __future__ import annotations
@@ -39,6 +42,9 @@ from pyspark.sql import functions as F
 from lakehouse_variance_spark.registry import register
 from lakehouse_variance_spark.tables import load_table
 
+# q17-shape: flag brands whose demand is erratic (CV above this).
+CV_THRESHOLD = 0.55
+
 # q92-shape: a line's discount must exceed this multiple of the per-part
 # average discount (1.3x, compared as 10*d*n > 13*sum).
 EXCESS_NUM, EXCESS_DEN = 13, 10
@@ -46,25 +52,90 @@ EXCESS_NUM, EXCESS_DEN = 13, 10
 # q92-shape date window.
 EXCESS_YEAR = 1996
 
-# q21/q40-shape pivot date and ratio band (2/3 <= before/after <= 3/2).
-PIVOT_DATE = "1998-01-01"
-
-# q72-shape fulfilment-lag threshold.
-LATE_DAYS = 60
-
 # q75-shape: the two years compared; any strict net decline qualifies
 # (a relative-decline threshold thins toward zero rows as per-brand volume
 # grows and YoY ratios concentrate at 1 — strict decline keeps the
 # selectivity scale-stable at ~half the brands).
 DECLINE_PREV, DECLINE_CURR = 1996, 1997
 
-# q37/q82-shape retail-price band (data range is [900, 999.9]).
-BAND_LO, BAND_HI = 920.0, 960.0
-BAND_FROM, BAND_TO = "1997-03-01", "1997-04-30"
-
 
 def _cents(col: str) -> F.Column:
     return F.round(F.col(col) * 100).cast("bigint")
+
+
+@register(
+    "join_stats_spread",
+    oracle=f"""
+    WITH m AS (
+        SELECT p.p_brand,
+               count(*) AS n_items,
+               CAST(sum(CAST(round(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
+                   AS sum_qty_cents,
+               CAST(sum(CAST(round(l.l_quantity * 100) AS BIGINT)
+                        * CAST(round(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
+                   AS sumsq_qty_cents
+        FROM lineitem l
+        JOIN part p ON p.p_partkey = l.l_partkey
+        JOIN orders o ON o.o_orderkey = l.l_orderkey
+        WHERE p.p_size < 25 AND o.o_orderpriority LIKE '1%'
+        GROUP BY p.p_brand),
+    s AS (
+        SELECT p_brand, n_items, sum_qty_cents,
+               CAST(sum_qty_cents AS DOUBLE) / CAST(n_items AS DOUBLE)
+                   AS mean_qty_cents,
+               sqrt((CAST(sumsq_qty_cents AS DOUBLE)
+                     - CAST(sum_qty_cents AS DOUBLE)
+                       * CAST(sum_qty_cents AS DOUBLE)
+                       / CAST(n_items AS DOUBLE))
+                    / CAST(n_items - 1 AS DOUBLE)) AS std_qty_cents
+        FROM m WHERE n_items > 1)
+    SELECT p_brand, n_items, sum_qty_cents, mean_qty_cents, std_qty_cents
+    FROM s
+    WHERE std_qty_cents > {CV_THRESHOLD} * mean_qty_cents
+    """,
+)
+def join_stats_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS-q17-shaped dispersion probe: join the fact table to two
+    dimensions, aggregate per brand, and keep brands whose quantity
+    coefficient of variation exceeds {CV_THRESHOLD} — erratic-demand
+    detection. Dispersion is derived from exact integer moments (n, sum,
+    sum-of-squares in cents), not a streaming stddev, so the value is
+    partition-order-independent on both engines.
+
+    Scale: partial aggregation reduces the fact scan before its single
+    shuffle on p_brand; `part` joins broadcast (dimension-sized). The
+    per-row cents square stays far below int64 even at SF 1000.
+    """
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    orders = load_table(spark, sf_dir, "orders")
+    qc = F.round(F.col("l_quantity") * 100).cast("bigint")
+    m = (
+        li.join(F.broadcast(part.filter(F.col("p_size") < 25)),
+                part.p_partkey == li.l_partkey)
+        .join(orders.filter(F.col("o_orderpriority").like("1%")),
+              orders.o_orderkey == li.l_orderkey)
+        .groupBy("p_brand")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(qc).alias("sum_qty_cents"),
+            F.sum(qc * qc).alias("sumsq_qty_cents"),
+        )
+        .filter(F.col("n_items") > 1)
+    )
+    d = lambda c: F.col(c).cast("double")  # noqa: E731
+    mean = (d("sum_qty_cents") / d("n_items")).alias("mean_qty_cents")
+    std = F.sqrt(
+        (
+            d("sumsq_qty_cents")
+            - d("sum_qty_cents") * d("sum_qty_cents") / d("n_items")
+        )
+        / (F.col("n_items") - 1).cast("double")
+    ).alias("std_qty_cents")
+    s = m.select("p_brand", "n_items", "sum_qty_cents", mean, std)
+    return s.filter(
+        F.col("std_qty_cents") > F.lit(CV_THRESHOLD) * F.col("mean_qty_cents")
+    )
 
 
 @register(
@@ -213,110 +284,6 @@ def returned_rebuy_quantities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "qty_before_after_pivot",
-    oracle=f"""
-    WITH b AS (
-        SELECT p.p_brand,
-               CAST(sum(CASE WHEN l.l_shipdate < TIMESTAMP '{PIVOT_DATE}'
-                   THEN CAST(round(l.l_quantity * 100) AS BIGINT)
-                   ELSE 0 END) AS BIGINT) AS before_c,
-               CAST(sum(CASE WHEN l.l_shipdate >= TIMESTAMP '{PIVOT_DATE}'
-                   THEN CAST(round(l.l_quantity * 100) AS BIGINT)
-                   ELSE 0 END) AS BIGINT) AS after_c
-        FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        GROUP BY p.p_brand)
-    SELECT p_brand, before_c, after_c
-    FROM b
-    WHERE 2 * after_c >= before_c AND 3 * before_c >= 2 * after_c
-    """,
-)
-def qty_before_after_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS-q21/q40-shaped before/after pivot-date ratio band: per-brand
-    quantity shipped before vs on-or-after a pivot date, keeping brands
-    whose before/after ratio lies in [2/3, 3/2]
-    (`docker/trino-client/queries/q21.sql:15-30`,
-    ``inv_before / inv_after BETWEEN 2.0/3.0 AND 3.0/2.0``).
-
-    Spark-first: ONE fact scan with two date-conditional integer sums
-    (the verbatim form is also a single scan — the shape's hard part is
-    the ratio band, which q21 writes as float division; here it is the
-    exact integer cross-product pair ``2*after >= before`` and
-    ``3*before >= 2*after``, so no quotient rounding on either engine).
-    The fact partial-aggregates map-side to |brands| rows.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    qc = F.round(F.col("l_quantity") * 100).cast("bigint")
-    pivot = F.lit(PIVOT_DATE).cast("timestamp")
-    b = (
-        li.join(F.broadcast(part), part.p_partkey == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.sum(F.when(F.col("l_shipdate") < pivot, qc).otherwise(F.lit(0)))
-            .alias("before_c"),
-            F.sum(F.when(F.col("l_shipdate") >= pivot, qc).otherwise(F.lit(0)))
-            .alias("after_c"),
-        )
-    )
-    return b.filter(
-        (2 * F.col("after_c") >= F.col("before_c"))
-        & (3 * F.col("before_c") >= 2 * F.col("after_c"))
-    ).select("p_brand", "before_c", "after_c")
-
-
-@register(
-    "late_ship_priority_counts",
-    oracle=f"""
-    SELECT o.o_orderpriority,
-           count(*) AS total_lines,
-           CAST(sum(CASE WHEN l.l_shipdate >
-                              o.o_orderdate + INTERVAL {LATE_DAYS} DAY
-                    THEN 1 ELSE 0 END) AS BIGINT) AS late_lines,
-           CAST(sum(CASE WHEN l.l_shipdate >
-                              o.o_orderdate + INTERVAL {LATE_DAYS} DAY
-                    THEN 1 ELSE 0 END) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS late_ratio
-    FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    GROUP BY o.o_orderpriority
-    """,
-)
-def late_ship_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS-q72-shaped fulfilment lag: lines shipping more than 60 days
-    after their order date, counted per order priority
-    (`docker/trino-client/queries/q72.sql:20-25` — the
-    ``d1.d_date + 5 days < d2.d_date`` cross-date join condition).
-
-    Spark-first: the cross-date comparison is a RESIDUAL on the orderkey
-    equi-join (never a join key), so the plan is one fact shuffle for the
-    sort-merge/shuffle-hash join and a tiny per-priority aggregate. The
-    late share is one IEEE division of two exact int64 counts.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    late = (
-        F.col("l_shipdate")
-        > F.col("o_orderdate") + F.expr(f"INTERVAL {LATE_DAYS} DAYS")
-    ).cast("bigint")
-    return (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("total_lines"),
-            F.sum(late).alias("late_lines"),
-        )
-        .select(
-            "o_orderpriority",
-            "total_lines",
-            "late_lines",
-            (
-                F.col("late_lines").cast("double")
-                / F.col("total_lines").cast("double")
-            ).alias("late_ratio"),
-        )
-    )
-
-
-@register(
     "yoy_decline_with_returns",
     oracle=f"""
     WITH net AS (
@@ -377,50 +344,6 @@ def yoy_decline_with_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("prev_net_c") > 0)
         & (F.col("curr_net_c") < F.col("prev_net_c"))
     ).select("p_brand", "prev_net_c", "curr_net_c")
-
-
-@register(
-    "price_band_active_items",
-    oracle=f"""
-    SELECT p.p_brand,
-           count(DISTINCT l.l_orderkey) AS n_orders,
-           count(DISTINCT p.p_partkey) AS n_parts
-    FROM part p JOIN lineitem l ON l.l_partkey = p.p_partkey
-    WHERE p.p_retailprice BETWEEN {BAND_LO} AND {BAND_HI}
-      AND l.l_shipdate >= TIMESTAMP '{BAND_FROM}'
-      AND l.l_shipdate < TIMESTAMP '{BAND_TO}'
-    GROUP BY p.p_brand
-    """,
-)
-def price_band_active_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS-q37/q82-shaped price-band activity: parts in a retail-price
-    band with shipments inside a 60-day window, distinct order and part
-    counts per brand (`docker/trino-client/queries/q82.sql:1-15` —
-    ``i_current_price BETWEEN 62 AND 92`` + date range +
-    ``count(distinct ...)``).
-
-    Spark-first: the price-band filter reduces the part dimension BEFORE
-    the join (predicate pushdown into the part scan — `PushedFilters`
-    shows the band), so the broadcast side is the filtered slice; the
-    date filter pushes into the fact scan. The two DISTINCT counts share
-    one (brand, orderkey, partkey)-distinct exchange under Spark's
-    multi-distinct planning; both engines count identical exact sets.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    banded = part.filter(F.col("p_retailprice").between(BAND_LO, BAND_HI))
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit(BAND_FROM).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(BAND_TO).cast("timestamp"))
-        )
-        .join(F.broadcast(banded), banded.p_partkey == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.countDistinct("l_orderkey").alias("n_orders"),
-            F.countDistinct("p_partkey").alias("n_parts"),
-        )
-    )
 
 
 # The naive q376-shaped text (the reference's generated TPC-DS workload,

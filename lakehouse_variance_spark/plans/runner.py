@@ -337,136 +337,13 @@ def run_workload_concurrent(
 
 
 # ---------------------------------------------------------------------------
-# Verbatim SQL-string execution (the reference's primary mode)
+# Verbatim SQL-string execution (the reference's primary mode). Each text
+# below runs verbatim under BOTH Spark SQL and DuckDB, so the oracle is the
+# same string. They cover grouping and recursion forms the 99 TPC-DS texts
+# (plans/tpcds_texts.py) lack.
 # ---------------------------------------------------------------------------
 
-_SQL_TEXT_EXISTS_INTERVAL = """
-WITH shipped AS (
-    SELECT l_orderkey, min(l_shipdate) AS first_ship
-    FROM lineitem GROUP BY l_orderkey
-)
-SELECT o.o_orderpriority,
-       count(*) AS n_orders,
-       sum(CASE WHEN s.first_ship <= o.o_orderdate + INTERVAL '60' DAY
-                THEN 1 ELSE 0 END) AS shipped_60d
-FROM orders o
-JOIN shipped s ON s.l_orderkey = o.o_orderkey
-WHERE EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l2
-                  WHERE l2.l_orderkey = o.o_orderkey
-                    AND l2.l_returnflag = 'R')
-GROUP BY o.o_orderpriority
-"""
-
-# Dialect-portable text: runs verbatim under BOTH Spark SQL and DuckDB, so
-# the oracle is literally the same string — the strongest form of the
-# "execute the query text, don't re-express it" parity check.
-_SQL_TEXT_ROLLUP_PIVOT = """
-SELECT o_orderpriority,
-       CAST(grouping(o_orderpriority) AS INT) AS g,
-       count(*) AS n_orders,
-       round(sum(o_totalprice), 2) AS total_price,
-       CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_open
-FROM orders
-GROUP BY ROLLUP (o_orderpriority)
-"""
-
-# Dialect-portable text #2: chained INTERSECT (reference q38.sql:11,20 and
-# q14 — customers present in every channel/period; distinct set semantics).
-_SQL_TEXT_INTERSECT3 = """
-SELECT c.c_mktsegment AS c_mktsegment, count(*) AS n_loyal
-FROM (
-    SELECT o_custkey FROM orders WHERE EXTRACT(YEAR FROM o_orderdate) = 1996
-    INTERSECT
-    SELECT o_custkey FROM orders WHERE EXTRACT(YEAR FROM o_orderdate) = 1997
-    INTERSECT
-    SELECT o_custkey FROM orders WHERE EXTRACT(YEAR FROM o_orderdate) = 1998
-) loyal
-JOIN customer c ON c.c_custkey = loyal.o_custkey
-GROUP BY c.c_mktsegment
-"""
-
-
-# Dialect-portable text #3: partitioned running sum with an explicit ROWS
-# frame over pre-aggregated daily cents (reference q51.sql:8,21,36,40 — the
-# cumulative-series shape). Dates render through CAST(... AS STRING) so both
-# engines emit the identical 'yyyy-MM-dd' text; money aggregates as integer
-# cents, exact under any partitioning.
-_SQL_TEXT_WINDOW_CUMULATIVE = """
-WITH daily AS (
-    SELECT o_orderpriority,
-           CAST(CAST(o_orderdate AS DATE) AS STRING) AS d,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-    FROM orders
-    GROUP BY o_orderpriority, d
-)
-SELECT o_orderpriority, d,
-       CAST(sum(cents) OVER (PARTITION BY o_orderpriority ORDER BY d
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS cum_cents
-FROM daily
-"""
-
-# Dialect-portable text #4: OR-of-ANDs disjunctive multi-table predicate
-# (reference q13.sql — three OR'd branches mixing columns of both tables).
-_SQL_TEXT_OR_OF_ANDS = """
-SELECT c.c_mktsegment AS c_mktsegment,
-       count(*) AS n_orders,
-       round(sum(o.o_totalprice), 2) AS total_price
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-WHERE (c.c_mktsegment = 'BUILDING'
-       AND o.o_totalprice BETWEEN 1000 AND 50000)
-   OR (c.c_mktsegment = 'MACHINERY'
-       AND o.o_totalprice BETWEEN 50000 AND 150000)
-   OR (c.c_mktsegment = 'AUTOMOBILE' AND o.o_orderstatus = 'F')
-GROUP BY c.c_mktsegment
-"""
-
-
-# Dialect-portable text #6: correlated scalar subquery over a shared CTE
-# (reference q1.sql:12-14 — "total > 1.2 * per-group average"). Money sums
-# aggregate as integer cents so the threshold comparison is exact in both
-# engines regardless of partition order.
-_SQL_TEXT_CORRELATED_SCALAR = """
-WITH ct AS (
-    SELECT c.c_custkey AS c_custkey,
-           c.c_nationkey AS c_nationkey,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                AS BIGINT) AS total_cents
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_nationkey)
-SELECT ct1.c_custkey AS c_custkey,
-       ct1.total_cents AS total_cents
-FROM ct ct1
-WHERE ct1.total_cents > (SELECT avg(ct2.total_cents) * 1.2
-                         FROM ct ct2
-                         WHERE ct2.c_nationkey = ct1.c_nationkey)
-ORDER BY ct1.c_custkey
-"""
-
-# Dialect-portable text #7: HAVING over an aggregate + rank() window over
-# the SAME aggregation's outputs + outer rank filter (the q16-style ORDER BY
-# count(DISTINCT ...) and q67-style rank-over-aggregate composed as one
-# statement). All-integer, tie-broken on the group key.
-_SQL_TEXT_HAVING_WINDOW_RANK = """
-SELECT l_suppkey, n_parts, rnk
-FROM (
-    SELECT l_suppkey,
-           count(DISTINCT l_partkey) AS n_parts,
-           rank() OVER (ORDER BY count(DISTINCT l_partkey) DESC,
-                        l_suppkey) AS rnk
-    FROM lineitem
-    GROUP BY l_suppkey
-    HAVING count(*) > 5) t
-WHERE rnk <= 20
-ORDER BY rnk
-"""
-
-
-# Dialect-portable text #8: explicit GROUPING SETS with grouping() markers —
+# Explicit GROUPING SETS with grouping() markers —
 # the generalization of the reference's ROLLUP queries (q22/q36/q67 etc. use
 # ROLLUP, which is sugar for exactly these sets); grouping() disambiguates
 # the NULLs of each grain.
@@ -482,46 +359,7 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 """
 
 
-# Dialect-portable text #9: the verbatim q11/q4 year_total CTE self-join —
-# one CTE instantiated twice per channel (4 logical instances), customers
-# whose 'N'-channel growth beats their 'A'-channel growth
-# (docker/trino-client/queries/q11.sql:1-60 down-scoped to our schema).
-# The optimized single-scan rewrite of the same semantics is
-# operators/relational_ds2.py:yoy_channel_growth_compare — this text proves
-# the engine also executes the un-rewritten form the reference ships.
-_SQL_TEXT_YEAR_TOTAL_SELFJOIN = """
-WITH year_total AS (
-    SELECT o.o_custkey AS custkey,
-           year(o.o_orderdate) AS dyear,
-           l.l_returnflag AS sale_type,
-           CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                AS BIGINT) AS total_cents
-    FROM lineitem l
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    WHERE year(o.o_orderdate) IN (1996, 1997)
-      AND l.l_returnflag IN ('N', 'A')
-    GROUP BY o.o_custkey, year(o.o_orderdate), l.l_returnflag)
-SELECT t_n_1.custkey AS o_custkey,
-       t_n_1.total_cents AS n_first_cents,
-       t_n_2.total_cents AS n_second_cents,
-       t_a_1.total_cents AS a_first_cents,
-       t_a_2.total_cents AS a_second_cents
-FROM year_total t_n_1
-JOIN year_total t_n_2 ON t_n_2.custkey = t_n_1.custkey
-JOIN year_total t_a_1 ON t_a_1.custkey = t_n_1.custkey
-JOIN year_total t_a_2 ON t_a_2.custkey = t_n_1.custkey
-WHERE t_n_1.sale_type = 'N' AND t_n_1.dyear = 1996
-  AND t_n_2.sale_type = 'N' AND t_n_2.dyear = 1997
-  AND t_a_1.sale_type = 'A' AND t_a_1.dyear = 1996
-  AND t_a_2.sale_type = 'A' AND t_a_2.dyear = 1997
-  AND t_n_1.total_cents > 0
-  AND t_a_1.total_cents > 0
-  AND CAST(t_n_2.total_cents AS DOUBLE) * CAST(t_a_1.total_cents AS DOUBLE)
-    > CAST(t_a_2.total_cents AS DOUBLE) * CAST(t_n_1.total_cents AS DOUBLE)
-"""
-
-
-# Dialect-portable text #11: WITH RECURSIVE — a month calendar spine
+# WITH RECURSIVE — a month calendar spine
 # generated by recursion (Spark 4's recursive CTE support), left-joined to
 # the fact so empty months surface as zero rows. The recursion depth is
 # |months| (bounded by the data's date span), not data-sized; the join is
@@ -545,7 +383,7 @@ GROUP BY months.m
 """
 
 
-# Dialect-portable text #10: GROUP BY CUBE — the full 2^k-grain lattice
+# GROUP BY CUBE — the full 2^k-grain lattice
 # (the reference's query set stops at ROLLUP; CUBE completes the grouping
 # vocabulary). Spark plans ONE Expand x4 + one aggregate — no per-grain
 # rescans — same as its ROLLUP/GROUPING SETS handling.
@@ -589,92 +427,6 @@ def register_sf_views(spark: SparkSession, sf_dir: str) -> None:
 def _register_sql_text_query() -> None:
     from lakehouse_variance_spark.registry import register
 
-    @register(
-        "sql_text_exists_interval",
-        oracle="""
-        WITH shipped AS (
-            SELECT l_orderkey, min(l_shipdate) AS first_ship
-            FROM lineitem GROUP BY l_orderkey
-        )
-        SELECT o.o_orderpriority,
-               count(*) AS n_orders,
-               CAST(sum(CASE WHEN s.first_ship <= o.o_orderdate + INTERVAL 60 DAY
-                        THEN 1 ELSE 0 END) AS BIGINT) AS shipped_60d
-        FROM orders o
-        JOIN shipped s ON s.l_orderkey = o.o_orderkey
-        WHERE EXISTS (SELECT 1 FROM lineitem l
-                      WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-          AND NOT EXISTS (SELECT 1 FROM lineitem l2
-                          WHERE l2.l_orderkey = o.o_orderkey
-                            AND l2.l_returnflag = 'R')
-        GROUP BY o.o_orderpriority
-        """,
-    )
-    def sql_text_exists_interval(spark: SparkSession, sf_dir: str):
-        """Verbatim Trino-dialect SQL text through ``spark.sql`` — the
-        reference's execution mode (``run_workload.py:38``): CTE, EXISTS and
-        NOT EXISTS subqueries (Catalyst rewrites to semi/anti joins), and
-        ``INTERVAL '60' DAY`` date arithmetic, resolved against temp views of
-        the sf tables. Proves the engine runs the query *strings*, not just
-        DataFrame re-expressions."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_EXISTS_INTERVAL)
-
-    @register("sql_text_rollup_pivot", oracle=_SQL_TEXT_ROLLUP_PIVOT)
-    def sql_text_rollup_pivot(spark: SparkSession, sf_dir: str):
-        """Verbatim ROLLUP + grouping() + conditional-aggregate SQL text
-        (reference q36.sql:5-9, q22.sql:12 — 11 ROLLUP queries, 127 CASE
-        WHEN) through ``spark.sql``. The oracle is the IDENTICAL string
-        DuckDB executes — zero re-expression on either side."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_ROLLUP_PIVOT)
-
-    @register("sql_text_intersect3", oracle=_SQL_TEXT_INTERSECT3)
-    def sql_text_intersect3(spark: SparkSession, sf_dir: str):
-        """Verbatim chained-INTERSECT SQL text (reference q38.sql:11,20,
-        q14.sql — multi-period customer intersection with Trino's
-        DISTINCT-set semantics, the §7 hard part), run through ``spark.sql``
-        with the IDENTICAL string as the DuckDB oracle. Catalyst plans each
-        INTERSECT as a left-semi join after aggregating both sides
-        distinct."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_INTERSECT3)
-
-    @register("sql_text_window_cumulative", oracle=_SQL_TEXT_WINDOW_CUMULATIVE)
-    def sql_text_window_cumulative(spark: SparkSession, sf_dir: str):
-        """Verbatim q51-shaped running-sum SQL text (PARTITION BY + ORDER BY
-        + explicit ROWS frame over aggregated daily series; reference
-        q51.sql:8,21,36,40) through ``spark.sql`` — the IDENTICAL string is
-        the DuckDB oracle."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_WINDOW_CUMULATIVE)
-
-    @register("sql_text_or_of_ands", oracle=_SQL_TEXT_OR_OF_ANDS)
-    def sql_text_or_of_ands(spark: SparkSession, sf_dir: str):
-        """Verbatim q13-shaped OR-of-ANDs SQL text through ``spark.sql``
-        with the IDENTICAL string as the DuckDB oracle; Catalyst pushes the
-        extractable single-table implications below the join."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_OR_OF_ANDS)
-
-    @register("sql_text_correlated_scalar", oracle=_SQL_TEXT_CORRELATED_SCALAR)
-    def sql_text_correlated_scalar(spark: SparkSession, sf_dir: str):
-        """Verbatim correlated-scalar-subquery text (q1.sql:12-14 shape)
-        through ``spark.sql`` with the IDENTICAL string as the DuckDB
-        oracle; Catalyst decorrelates the subquery into an aggregate+join."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_CORRELATED_SCALAR)
-
-    @register(
-        "sql_text_having_window_rank", oracle=_SQL_TEXT_HAVING_WINDOW_RANK
-    )
-    def sql_text_having_window_rank(spark: SparkSession, sf_dir: str):
-        """Verbatim HAVING + rank()-over-aggregate text (q16 ORDER BY
-        count(DISTINCT) + q67 rank-over-aggregate composed); identical
-        string on both engines."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_HAVING_WINDOW_RANK)
-
     @register("sql_text_grouping_sets", oracle=_SQL_TEXT_GROUPING_SETS)
     def sql_text_grouping_sets(spark: SparkSession, sf_dir: str):
         """Verbatim GROUPING SETS text with grouping() markers (the grain
@@ -703,18 +455,6 @@ def _register_sql_text_query() -> None:
         (the reference's 99 queries use ROLLUP only)."""
         register_sf_views(spark, sf_dir)
         return spark.sql(_SQL_TEXT_CUBE)
-
-    @register(
-        "sql_text_year_total_selfjoin", oracle=_SQL_TEXT_YEAR_TOTAL_SELFJOIN
-    )
-    def sql_text_year_total_selfjoin(spark: SparkSession, sf_dir: str):
-        """Verbatim q11/q4 year_total CTE four-instance self-join —
-        identical string on both engines. Spark plans the CTE once and
-        reuses the exchange across the four instances; the semantically
-        equal single-scan conditional-agg rewrite is
-        ``yoy_channel_growth_compare`` (results must agree — tested)."""
-        register_sf_views(spark, sf_dir)
-        return spark.sql(_SQL_TEXT_YEAR_TOTAL_SELFJOIN)
 
 
 _register_sql_text_query()

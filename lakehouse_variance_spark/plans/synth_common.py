@@ -17,6 +17,8 @@ import functools
 import hashlib
 import os
 import re as _re
+import shutil
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
@@ -211,40 +213,11 @@ def materialize_and_register(
                     ).createOrReplaceTempView(name)
         finally:
             spark.conf.set("spark.sql.codegen.wholeStage", prev_wscg)
+        # _DONE names the sf_dir the tree was derived from, so a later
+        # build for the same sf_dir can find and drop the trees it
+        # supersedes (the key is a hash, which cannot be read back).
         with open(os.path.join(tmp, "_DONE"), "w") as fh:
-            fh.write(defs_fingerprint(defs) + "\n")
-        import shutil
-
-        if os.path.isdir(out) and not os.path.exists(done):
-            # Stale half-built tree from a pre-rename-scheme run.  Move it
-            # aside atomically rather than rmtree-ing: a concurrent builder
-            # could rename a COMPLETE cache into `out` between our staleness
-            # check and a delete, and rmtree would then destroy a cache that
-            # other sessions already registered DataFrames against.  A
-            # rename either moves the genuinely-stale tree or (if the racer
-            # won) moves the racer's tree — in which case `done` now exists
-            # under the new name check below and we restore nothing, but our
-            # own freshly built `tmp` renames into place with identical
-            # contents (same defs fingerprint), so readers stay consistent.
-            stale = f"{out}.stale-{os.getpid()}"
-            try:
-                os.rename(out, stale)
-                if os.path.exists(os.path.join(stale, "_DONE")):
-                    # We displaced a COMPLETE cache a racer just published;
-                    # put it back and discard our private build instead.
-                    try:
-                        os.rename(stale, out)
-                    except OSError:
-                        # Yet another racer published an equal cache into
-                        # `out` (same defs fingerprint); the displaced copy
-                        # is redundant — reclaim it rather than leaking a
-                        # full dataset tree per occurrence (ADVICE r7).
-                        if os.path.exists(done):
-                            shutil.rmtree(stale, ignore_errors=True)
-                else:
-                    shutil.rmtree(stale, ignore_errors=True)
-            except OSError:
-                pass  # `out` vanished or is being replaced; rename below decides
+            fh.write(f"{defs_fingerprint(defs)}\n{os.path.abspath(sf_dir)}\n")
         try:
             os.rename(tmp, out)
         except OSError:
@@ -252,8 +225,37 @@ def materialize_and_register(
                 shutil.rmtree(tmp, ignore_errors=True)
             else:
                 raise
+        else:
+            _drop_superseded(cache_root, out, sf_dir)
     for name in defs:
         path = os.path.join(out, name)
         df = memo(spark, ("derived", path), lambda: spark.read.parquet(path))
         df.createOrReplaceTempView(name)
     catalog_state_set(spark, token)
+
+
+def _drop_superseded(cache_root: str, keep: str, sf_dir: str) -> None:
+    """Delete every other published tree under ``cache_root`` derived from
+    ``sf_dir``: each is keyed by base-file stamps or defs that no longer
+    hold, so registration cannot select it again. Trees of other sf_dirs
+    stay, and so do trees whose ``_DONE`` predates the sf_dir line; those
+    are reported."""
+    sf_abs = os.path.abspath(sf_dir)
+    legacy = 0
+    with os.scandir(cache_root) as entries:
+        trees = [e.path for e in entries
+                 # skip this tree and pid-suffixed builds in progress
+                 if e.is_dir() and e.path != keep and "." not in e.name]
+    for tree in trees:
+        try:
+            with open(os.path.join(tree, "_DONE")) as fh:
+                lines = fh.read().splitlines()
+        except OSError:
+            continue
+        if len(lines) < 2:
+            legacy += 1
+        elif lines[1] == sf_abs:
+            shutil.rmtree(tree, ignore_errors=True)
+    if legacy:
+        print(f"# {cache_root}: {legacy} cache tree(s) without an sf_dir "
+              "line in _DONE left in place", file=sys.stderr)

@@ -50,7 +50,6 @@ def load_all() -> None:
         ranges,
         redaction,
         relational,
-        relational_ds,
         relational_ds2,
         relational_ds3,
         relational_ext,

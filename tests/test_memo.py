@@ -96,7 +96,7 @@ def test_session_state_is_per_session_and_dies_with_it():
 def test_new_session_runs_text_queries_after_first_registered(spark):
     """A second session's register helpers must not trust the first
     session's catalog token: temp views are per session."""
-    names = ("tpcds_q3", "sql_text_exists_interval")
+    names = ("tpcds_q3", "sql_text_cube")
     want = {n: _rows(registry.QUERIES[n](spark, SF_DIR)) for n in names}
     other = spark.newSession()
     for n in reversed(names):
@@ -165,3 +165,42 @@ def test_derived_family_follows_base_rewrite(
     assert derived_and_counted() == (full, full)
     _rewrite(base, pq.read_table(base).slice(0, full // 2))
     assert derived_and_counted() == (full // 2, full // 2)
+
+
+def test_rebuilt_family_drops_the_trees_it_supersedes(spark, sf_copy, tmp_path):
+    """Publishing a derived tree deletes the older trees of the same
+    sf_dir; trees of another sf_dir, and trees whose _DONE names no
+    sf_dir, stay."""
+    from lakehouse_variance_spark.plans import synth_common as synth
+
+    cache_root = tmp_path / "cache"
+    other_sf = tmp_path / "other_sf"
+    shutil.copytree(sf_copy, other_sf)
+    legacy = cache_root / "legacy"
+    legacy.mkdir(parents=True)
+    (legacy / "_DONE").write_text("0123456789ab\n")
+
+    def register(sf_dir) -> None:
+        synth.materialize_and_register(
+            spark, str(sf_dir), {"tiny_nation": "SELECT n_nationkey FROM nation"},
+            ("nation",), str(cache_root), build_sql=lambda sql: sql,
+        )
+
+    def trees_of(sf_dir) -> list[str]:
+        return sorted(
+            d.name for d in cache_root.iterdir()
+            if (d / "_DONE").read_text().splitlines()[1:] == [str(sf_dir)]
+        )
+
+    register(sf_copy)
+    register(other_sf)
+    first = trees_of(sf_copy)
+    assert len(first) == 1 and len(trees_of(other_sf)) == 1
+    nation = os.path.join(sf_copy, "nation.parquet")
+    _rewrite(nation, pq.read_table(nation).slice(0, 10))
+    register(sf_copy)
+    assert spark.table("tiny_nation").count() == 10
+    rebuilt = trees_of(sf_copy)
+    assert len(rebuilt) == 1 and rebuilt != first
+    assert len(trees_of(other_sf)) == 1
+    assert legacy.is_dir()

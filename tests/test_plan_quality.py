@@ -45,13 +45,13 @@ def test_column_pruning_reads_narrow_schema(spark):
 
 
 def test_topk_uses_take_ordered(spark):
-    plan = _plan(spark, "topk_orders")
+    plan = _plan(spark, "join_topk_revenue")
     assert "TakeOrderedAndProject" in plan
 
 
 def test_semi_anti_joins_are_joins_not_filters(spark):
-    semi = _plan(spark, "join_semi_exists")
-    anti = _plan(spark, "join_anti_not_exists")
+    semi = _plan(spark, "tpcds_q10")
+    anti = _plan(spark, "tpcds_q69")
     assert "LeftSemi" in semi
     assert "LeftAnti" in anti
 
@@ -95,11 +95,11 @@ def test_time_rollup_reaggregates_partials(spark):
 
 
 def test_semi_anti_combined_single_key_copartition(spark):
-    # q94 shape: EXISTS -> LeftSemi, NOT EXISTS -> LeftAnti, and all three
-    # lineitem branches shuffle on the same l_orderkey, so AQE/exchange
-    # reuse keeps the plan at one key's partitioning (no pair explosion,
-    # no cartesian residual).
-    plan = _plan(spark, "semi_anti_combined")
+    # q94: EXISTS -> LeftSemi, NOT EXISTS -> LeftAnti, and all three
+    # web_sales/web_returns branches correlate on ws_order_number, so the
+    # plan stays at one key's partitioning (no pair explosion, no
+    # cartesian residual).
+    plan = _plan(spark, "tpcds_q94")
     assert "LeftSemi" in plan
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
@@ -125,10 +125,10 @@ def test_window_extras_partition_by_customer(spark):
 
 
 def test_frequent_items_filters_are_semi_joins(spark):
-    # q23 shape: both IN-subquery filters must plan as LeftSemi joins on
+    # q23: both IN-subquery filters must plan as LeftSemi joins on
     # their aggregation keys — never as materialized DISTINCT + inner join,
     # and never nested-loop.
-    plan = _plan(spark, "frequent_items_revenue")
+    plan = _plan(spark, "tpcds_q23")
     assert plan.count("LeftSemi") >= 2
     assert "CartesianProduct" not in plan
 
@@ -173,22 +173,6 @@ def test_pack_offsets_single_scan_single_window_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1  # by source, for the window
 
 
-def test_growth_comparison_one_scan_broadcast(spark):
-    """q31 shape: one fact scan + broadcast customer join — never the
-    six-CTE/five-join literal plan."""
-    plan = _plan(spark, "join_growth_comparison")
-    assert plan.count("FileScan parquet") == 2  # orders + customer only
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_equal_revenue_bands_single_scan_no_join(spark):
-    """q58 shape: three channels from ONE conditional-aggregation scan."""
-    plan = _plan(spark, "join_equal_revenue_bands")
-    assert plan.count("FileScan parquet") == 1
-    assert "Join" not in plan
-
-
 def test_percent_rank_single_exchange(spark):
     plan = _plan(spark, "window_percent_rank_cume")
     assert plan.count("Exchange hashpartitioning") == 1
@@ -224,9 +208,9 @@ def test_stats_spread_broadcasts_part_dimension(spark):
 
 
 def test_rollup_rank_windows_aggregate_not_fact(spark):
-    """q67 shape: Expand/rollup happens before the rank window, so the
-    window input is the aggregate, and part broadcasts."""
-    plan = _plan(spark, "rollup_rank_topn_brands")
+    """q67: Expand/rollup happens before the rank window, so the
+    window input is the aggregate, and the dimensions broadcast."""
+    plan = _plan(spark, "tpcds_q67")
     assert "BroadcastHashJoin" in plan
     assert plan.index("Expand") > plan.index("Window") or (
         # toString prints top-down: Window (consumer) appears before
@@ -262,7 +246,7 @@ def test_rank_filter_gets_window_group_limit(spark):
     # pre-filters to its local top-k BEFORE the window shuffle, so the
     # exchange carries O(k x partitions x groups), not the full fact —
     # the optimization that makes window-top-k viable at 100 TB.
-    for q in ("window_rank_topn", "embed_cosine_topk"):
+    for q in ("tpcds_q67", "embed_cosine_topk"):
         plan = (
             registry.QUERIES[q](spark, SF_DIR)
             ._jdf.queryExecution()

@@ -41,7 +41,6 @@ BNLJ_ALLOWED: set[str] = {
     "text_doc_rarity_score",        # docs x n_total (1 row)
     "vocab_source_keywords",        # cells x corpus-count n_tab (1 row)
     "sample_weighted_systematic",   # prefix rows x total-chars agg (1 row)
-    "frequent_items_revenue",       # agg x global threshold (1 row)
     "text_bm25_topk",               # tf x corpus stats (1 row) + idf (3 rows)
     "search_hybrid_rrf",            # composes text_bm25_topk verbatim, so it
                                     # inherits the SAME audited 1-row corpus-
@@ -49,7 +48,6 @@ BNLJ_ALLOWED: set[str] = {
                                     # is an equi SortMergeJoin on doc_id
                                     # (shape-gated in test_plan_quality.py)
     "cross_channel_items_rollup",   # rollup x grand total (1 row)
-    "scalar_ratio_am_pm",           # am (1 row) x pm (1 row)
     "agg_hll_sketch_union",         # union sketch (1 row) x exact ALL (1 row)
     # Verbatim TPC-DS texts whose FROM-lists cross-join no-grouping-key
     # scalar aggregates (each side is exactly one row by construction):

@@ -46,12 +46,6 @@ def test_returned_rebuy_pair_join_is_equi_not_nested_loop(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
 
-def test_qty_before_after_single_fact_scan(spark):
-    plan = _plan(spark, "qty_before_after_pivot")
-    assert plan.count("FileScan parquet") == 2  # lineitem + part, once each
-    assert "BroadcastHashJoin" in plan
-
-
 def test_yoy_decline_single_scan_and_year_filter(spark):
     # q75's union-of-channels + self-join collapses to one conditional agg;
     # the year filter must reach the fact scan as a pushed predicate.
@@ -66,26 +60,6 @@ def test_yoy_decline_single_scan_and_year_filter(spark):
     for r in rows:
         assert r.prev_net_c > 0
         assert r.curr_net_c < r.prev_net_c
-
-
-def test_price_band_pushes_band_into_part_scan(spark):
-    # The retail-price band must prune the part dimension at its scan,
-    # before the broadcast, and the date range must prune the fact scan.
-    plan = _plan(spark, "price_band_active_items")
-    assert "GreaterThanOrEqual(p_retailprice" in plan
-    assert "GreaterThanOrEqual(l_shipdate" in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_late_ship_residual_on_equi_join(spark):
-    # Cross-date comparison is a residual on the orderkey equi-join.
-    plan = _plan(spark, "late_ship_priority_counts")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    df = registry.QUERIES["late_ship_priority_counts"](spark, SF_DIR)
-    for r in df.collect():
-        assert 0 <= r.late_lines <= r.total_lines
-        assert abs(r.late_ratio - r.late_lines / r.total_lines) == 0.0
 
 
 def test_tpch_text_plans(spark):
