@@ -15,56 +15,6 @@ scripts/driver_sim.py regardless, so nothing escapes re-checking).
 """
 
 SAMPLING_PRIORITY: tuple[str, ...] = (
-    'tpcds_q91',
-    'tpcds_q92',
-    'tpcds_q93',
-    'tpcds_q94',
-    'tpcds_q95',
-    'tpcds_q96',
-    'tpcds_q97',
-    'tpcds_q98',
-    'tpcds_q99',
-    'bpe_first_merge_pairs',
-    'tpch_q1',
-    'tpch_q2',
-    'tpch_q3',
-    'tpch_q4',
-    'tpch_q5',
-    'tpch_q6',
-    'tpch_q7',
-    'tpch_q8',
-    'tpch_q9',
-    'text_bigram_lm_fluency',
-    'tpch_q10',
-    'tpch_q11',
-    'tpch_q12',
-    'tpch_q13',
-    'tpch_q14',
-    'tpch_q15',
-    'tpch_q16',
-    'tpch_q17',
-    'tpch_q18',
-    'bpe_train_merge_table',
-    'tpch_q19',
-    'tpch_q20',
-    'tpch_q21',
-    'tpch_q22',
-    'carbon_upsample_prefix',
-    'workload_quantize_orderings',
-    'fifo_schedule_carbon',
-    'greedy_lowcarbon_schedule',
-    'skew_salted_join_agg',
-    'select_dsir_importance',
-    'scrub_trace_redaction',
-    'stream_cdc_upsert',
-    'stream_incremental_ingest',
-    'stream_event_window',
-    'session_window_agg',
-    'stream_stateful_user_stats',
-    'stream_static_join_dim',
-    'stream_dedup_exactly_once',
-    'stream_stream_join',
-    'curriculum_training_order',
     'stream_sliding_window',
     'stream_ewma_anomaly',
     'event_transition_counts',

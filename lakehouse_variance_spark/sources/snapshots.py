@@ -40,16 +40,55 @@ are likewise global; branches are just named heads into the same history).
 a branch commit NEVER changes what mainline readers see. Refs live in one
 small JSON beside the manifests, updated with the same temp+replace
 atomicity; `expire_snapshots` keeps every ref target alive.
+
+Per-file stats (Iceberg's manifest entry fields): ``file_stats`` maps each
+listed path to its row count, byte size and, per top-level column, ``[min,
+max, null_count]`` — ``None`` ("unknown") when the footer cannot bound it
+(decimal, timestamp and nested columns, or a missing footer statistic).
+The commit that writes a file reads its footer once with pyarrow; later
+commits copy the entry. A column a file predates is absent from its entry
+and reads as all NULL. OPTIMIZE and ``files_table`` read counts from here
+and open no footer.
+
+Merge-on-read DELETE (Iceberg v2's row-level delete): a manifest's
+``deletes`` lists pending ``{"where": <predicate SQL>, "files": [...]}``
+entries; a row of a covered file is gone when ``where`` is TRUE for it.
+Every scan goes through :func:`_live_scan`, which applies them in the
+one parquet scan. An eligible DELETE runs no Spark job: from the stats
+it leaves a file that cannot match untouched, drops a file whose every
+row matches (none NULL) from the manifest, and covers the rest. The
+stats decide per conjunct of the predicate — a column IS [NOT] NULL or
+compared with a literal; any other conjunct may be anything. OPTIMIZE
+folds the pending deletes in. A manifest without ``file_stats`` and
+``deletes`` (written before they existed) is refused, as one without
+``schema`` is. Eligible means the optimized predicate
+uses only the SAFE SET — table columns, non-timestamp literals, AND / OR
+/ NOT, ``= <=> < <= > >=``, IN, IS [NOT] NULL, ``%`` / ``pmod`` by a
+nonzero literal, and casts ``Cast.canUpCast`` allows that touch no
+timestamp — so it is deterministic, reads nothing outside the row and
+cannot raise under ANSI mode, and its recorded SQL (the optimized form,
+with implicit casts explicit) re-evaluates to the same rows at any later
+read in any session. Every other predicate (subqueries, UDFs,
+non-deterministic or time-zone-dependent functions, narrowing casts such
+as ``CAST(string_col AS BIGINT)``) takes the copy-on-write path:
+rewrite the files that hold matching live rows.
+
+Carry-over: append, branch commit and stream-append keep the parent's
+stats and deletes; overwrite, stream-merge and OPTIMIZE start with none
+pending; rollback copies the target version's; copy-on-write drops the
+entries of the files it rewrote.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DataType,
@@ -87,20 +126,108 @@ def _read_manifest(table_dir: str, version: int) -> dict:
     return json.loads(path.read_text())
 
 
+def _field(manifest: dict, name: str):
+    """A field every current manifest carries; a table written before the
+    field existed is refused (rewrite it)."""
+    if name not in manifest:
+        raise ValueError(
+            f"snapshot v{manifest['version']} manifest has no {name!r} field"
+        )
+    return manifest[name]
+
+
 def _table_schema(manifest: dict) -> StructType:
     """The read schema a manifest records (the one every read plans with)."""
-    if "schema" not in manifest:
-        raise ValueError(
-            f"snapshot v{manifest['version']} manifest has no 'schema' field"
-        )
-    return StructType.fromJson(manifest["schema"])
+    return StructType.fromJson(_field(manifest, "schema"))
 
 
 def _scan(spark: SparkSession, manifest: dict, files: list[str]) -> DataFrame:
     """Parquet scan of ``files`` under the manifest's schema: no footer is
     read at planning time, and files written before a column was added
-    read it as NULL."""
+    read it as NULL. No files (every one deleted whole) is an empty
+    table."""
+    if not files:
+        return spark.createDataFrame([], _table_schema(manifest))
     return spark.read.schema(_table_schema(manifest)).parquet(*files)
+
+
+def _live_scan(
+    spark: SparkSession, manifest: dict, files: list[str]
+) -> DataFrame:
+    """The scan every reader uses: ``files`` under the manifest's schema,
+    minus the rows its pending deletes remove from them. One parquet scan
+    with one conjunct per pending entry that covers any of ``files`` — a
+    row survives unless ``where`` is TRUE and its file is covered (a
+    NULL ``where`` keeps the row, as SQL DELETE does). The conjuncts go
+    to Spark as one SQL string: one py4j call and one analysis, where
+    Column literals cost a round trip per file name."""
+    df = _scan(spark, manifest, files)
+    names = {os.path.basename(f) for f in files}
+    keep = []
+    for d in _field(manifest, "deletes"):
+        hit = sorted(names.intersection(map(os.path.basename, d["files"])))
+        if hit:
+            quoted = ", ".join(
+                "'" + n.replace("\\", "\\\\").replace("'", "\\'") + "'" for n in hit
+            )
+            keep.append(
+                f"NOT coalesce(({d['where']}) AND _metadata.file_name IN ({quoted}), false)"
+            )
+    return df.filter(" AND ".join(keep)) if keep else df
+
+
+def _stat_type(t) -> bool:
+    """Arrow types whose footer min/max the manifest records."""
+    import pyarrow as pa
+
+    return (
+        pa.types.is_integer(t)
+        or pa.types.is_floating(t)
+        or pa.types.is_string(t)
+        or pa.types.is_date32(t)
+        or pa.types.is_boolean(t)
+    )
+
+
+def _column_stats(meta, i: int) -> list | None:
+    """``[min, max, null_count]`` of leaf column ``i`` over all row groups,
+    or None when some row group holding values has no bound."""
+    lo = hi = None
+    nulls = 0
+    for g in range(meta.num_row_groups):
+        group = meta.row_group(g)
+        s = group.column(i).statistics
+        if s is None or not s.has_null_count:
+            return None
+        nulls += s.null_count
+        if s.null_count == group.num_rows:
+            continue
+        if not s.has_min_max:
+            return None
+        lo = s.min if lo is None else min(lo, s.min)
+        hi = s.max if hi is None else max(hi, s.max)
+    if isinstance(lo, datetime.date):
+        lo, hi = lo.isoformat(), hi.isoformat()
+    return [lo, hi, nulls]
+
+
+def _footer_stats(path: str) -> dict:
+    """A data file's manifest entry, read from its parquet footer."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    meta = pf.metadata
+    leaves = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+    columns = {}
+    for field in pf.schema_arrow:
+        i = leaves.get(field.name)
+        ok = i is not None and _stat_type(field.type)
+        columns[field.name] = _column_stats(meta, i) if ok else None
+    return {
+        "rows": meta.num_rows,
+        "bytes": os.path.getsize(path),
+        "columns": columns,
+    }
 
 
 def _merge_type(table: DataType, new: DataType, column: str) -> DataType:
@@ -154,7 +281,7 @@ def _commit(table_dir: str, manifest: dict) -> int:
             f"concurrent commit: v{manifest['version']} already exists"
         )
     tmp = vdir / f".tmp-{uuid.uuid4().hex}.json"
-    tmp.write_text(json.dumps(manifest, indent=1, sort_keys=True))
+    tmp.write_text(json.dumps(manifest, sort_keys=True, separators=(",", ":")))
     os.replace(tmp, target)
     committed = json.loads(target.read_text())
     if committed.get("commit_id") != manifest["commit_id"]:
@@ -274,6 +401,66 @@ def read_ref(spark: SparkSession, table_dir: str, name: str) -> DataFrame:
     return read_snapshot(spark, table_dir, resolve_ref(table_dir, name))
 
 
+def _carry(manifest: dict) -> dict:
+    """What a commit keeps of ``manifest``: its files, their stats and its
+    pending deletes."""
+    return {
+        "files": manifest["files"],
+        "file_stats": _field(manifest, "file_stats"),
+        "deletes": _field(manifest, "deletes"),
+    }
+
+
+_NOTHING = {"files": [], "file_stats": {}, "deletes": []}
+
+
+def _publish(
+    table_dir: str,
+    *,
+    parent: int,
+    operation: str,
+    schema: dict,
+    base: dict,
+    new: DataFrame | None = None,
+    ref: str = "main",
+    extra: dict | None = None,
+) -> int:
+    """Shared commit body: write ``new``'s rows (when given) under a fresh
+    commit dir and read their footer stats, publish a manifest listing
+    ``base``'s files, stats and pending deletes plus the new files, and
+    advance ``ref``. Every commit path funnels through here so fixes land
+    once. Pending deletes name files by base name, so a name may appear
+    once per manifest."""
+    version = current_version(table_dir) + 1
+    commit_id = uuid.uuid4().hex
+    files = list(base["files"])
+    stats = {f: base["file_stats"][f] for f in files}
+    if new is not None:
+        data_dir = Path(table_dir) / "data" / f"c{version}-{commit_id[:8]}"
+        new.write.mode("error").parquet(str(data_dir))
+        added = sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file())
+        files += added
+        stats.update((f, _footer_stats(f)) for f in added)
+    names = [os.path.basename(f) for f in files]
+    if len(set(names)) != len(names):
+        raise RuntimeError(f"v{version}: a data file name repeats in the manifest")
+    manifest = {
+        "version": version,
+        "parent": parent,
+        "operation": operation,
+        "commit_id": commit_id,
+        "schema": schema,
+        "files": files,
+        "file_stats": stats,
+        "deletes": base["deletes"],
+    }
+    if extra:
+        manifest.update(extra)
+    v = _commit(table_dir, manifest)
+    _advance_branch(table_dir, ref, v)
+    return v
+
+
 def _commit_dataframe(
     df: DataFrame,
     table_dir: str,
@@ -284,36 +471,26 @@ def _commit_dataframe(
     ref: str,
     extra: dict | None = None,
 ) -> int:
-    """Shared commit body: write ``df``'s files under a fresh commit dir,
-    build the manifest (append = parent's files + new, overwrite = new
-    only), publish it atomically, and advance ``ref``. Every writer path
-    (mainline, branch, streaming sink) funnels through here so fixes land
-    once. The manifest's schema is ``df``'s for an overwrite, and the
-    parent's merged with ``df``'s for an append; a type conflict raises
-    before any file is written."""
-    schema, base = df.schema, []
+    """Commit ``df``'s rows: an append keeps the parent's files, stats and
+    pending deletes, an overwrite starts from nothing. The manifest's
+    schema is ``df``'s for an overwrite, and the parent's merged with
+    ``df``'s for an append; a type conflict raises before any file is
+    written."""
+    schema, base = df.schema, _NOTHING
     if mode == "append" and parent > 0:
         parent_manifest = _read_manifest(table_dir, parent)
         schema = _merge_type(_table_schema(parent_manifest), schema, "")
-        base = parent_manifest["files"]
-    version = current_version(table_dir) + 1
-    commit_id = uuid.uuid4().hex
-    data_dir = Path(table_dir) / "data" / f"c{version}-{commit_id[:8]}"
-    df.write.mode("error").parquet(str(data_dir))
-    new_files = sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file())
-    manifest = {
-        "version": version,
-        "parent": parent,
-        "operation": operation,
-        "commit_id": commit_id,
-        "schema": schema.jsonValue(),
-        "files": base + new_files,
-    }
-    if extra:
-        manifest.update(extra)
-    v = _commit(table_dir, manifest)
-    _advance_branch(table_dir, ref, v)
-    return v
+        base = _carry(parent_manifest)
+    return _publish(
+        table_dir,
+        parent=parent,
+        operation=operation,
+        schema=schema.jsonValue(),
+        base=base,
+        new=df,
+        ref=ref,
+        extra=extra,
+    )
 
 
 def commit_to_branch(
@@ -365,35 +542,26 @@ def read_snapshot(
 ) -> DataFrame:
     """Read the table as of ``version`` (latest when None) — one manifest
     read plus an explicit-file-list parquet scan under the schema the
-    manifest records. Planning opens no data file and the data directory
-    is never listed; columns added in later commits read as NULL for
-    older files."""
+    manifest records, with the version's pending deletes applied.
+    Planning opens no data file and the data directory is never listed;
+    columns added in later commits read as NULL for older files."""
     v = version if version is not None else _main_head(table_dir)
     manifest = _read_manifest(table_dir, v)
-    if not manifest["files"]:
-        raise ValueError(f"snapshot v{v} has no data files")
-    return _scan(spark, manifest, manifest["files"])
+    return _live_scan(spark, manifest, manifest["files"])
 
 
 def rollback(table_dir: str, to_version: int) -> int:
-    """Commit a NEW version whose visible file set is ``to_version``'s —
-    history stays intact (the rolled-back versions remain readable)."""
+    """Commit a NEW version whose visible rows are ``to_version``'s (its
+    files, their stats and its pending deletes) — history stays intact
+    (the rolled-back versions remain readable)."""
     old = _read_manifest(table_dir, to_version)
-    parent = _main_head(table_dir)
-    commit_id = uuid.uuid4().hex
-    v = _commit(
+    return _publish(
         table_dir,
-        {
-            "version": current_version(table_dir) + 1,
-            "parent": parent,
-            "operation": f"rollback->{to_version}",
-            "commit_id": commit_id,
-            "schema": _table_schema(old).jsonValue(),
-            "files": old["files"],
-        },
+        parent=_main_head(table_dir),
+        operation=f"rollback->{to_version}",
+        schema=_table_schema(old).jsonValue(),
+        base=_carry(old),
     )
-    _advance_branch(table_dir, "main", v)
-    return v
 
 
 def history(table_dir: str) -> list[dict]:
@@ -567,31 +735,271 @@ def snapshot_batch_writer(table_dir: str):
     return write_batch
 
 
+_COMPARE = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+_BOOLEAN = {"And", "Or", "Not", "In", "InSet", "IsNull", "IsNotNull",
+            "EqualNullSafe", *_COMPARE}
+_INTEGRAL = {"byte", "short", "integer", "long"}
+# Column types whose recorded bounds decide a delete. Float bounds are
+# recorded but unused: parquet leaves NaN out of them, and Spark orders
+# NaN above every number.
+_BOUNDED = _INTEGRAL | {"string", "date", "boolean"}
+_ANY = {True, False, None}
+
+
+def _tree(nodes: list[dict]) -> tuple:
+    """Catalyst's pre-order JSON node list as ``(kind, node, children)``."""
+    it = iter(nodes)
+
+    def build():
+        n = next(it)
+        kind = n["class"].rsplit(".", 1)[-1]
+        return kind, n, [build() for _ in range(n["num-children"])]
+
+    return build()
+
+
+def _safe_type(expr: tuple, columns: set[str], can_up_cast) -> object:
+    """The data type ``expr`` yields when every node of it is in the safe
+    set (see the module docstring), else None."""
+    kind, node, kids = expr
+    types = [_safe_type(k, columns, can_up_cast) for k in kids]
+    if None in types:
+        return None
+    if kind == "AttributeReference":
+        return node["dataType"] if node["name"] in columns else None
+    if kind == "Literal":
+        t = node["dataType"]
+        return t if isinstance(t, str) and not t.startswith("timestamp") else None
+    if kind in _BOOLEAN:
+        return "boolean"
+    if kind in ("Remainder", "Pmod"):
+        by_kind, by, _ = kids[1]
+        nonzero = by_kind == "Literal" and float(by["value"] or 0) != 0
+        return types[0] if nonzero else None
+    if kind == "Cast":
+        src, dst = types[0], node["dataType"]
+        atomic = all(
+            isinstance(t, str) and not t.startswith("timestamp")
+            for t in (src, dst)
+        )
+        return dst if atomic and can_up_cast(src, dst) else None
+    return None
+
+
+def _column(expr: tuple, stats: dict) -> tuple | None:
+    """``(lo, hi, may_null, all_null)`` of a column reference over the
+    rows of the file ``stats`` describes; ``lo``/``hi`` None when
+    unbounded. None for any other expression."""
+    kind, node, _ = expr
+    if kind != "AttributeReference":
+        return None
+    # a column the file predates is NULL in every row
+    c = stats["columns"].get(node["name"], [None, None, stats["rows"]])
+    if c is None:
+        return (None, None, True, False)
+    lo, hi, nulls = c
+    if nulls == stats["rows"]:
+        return (None, None, True, True)
+    if node["dataType"] not in _BOUNDED:
+        lo = hi = None
+    elif node["dataType"] == "date":
+        lo, hi = datetime.date.fromisoformat(lo), datetime.date.fromisoformat(hi)
+    return (lo, hi, nulls > 0, False)
+
+
+def _literal(expr: tuple):
+    """A non-NULL literal's value in the form column bounds take, else
+    None."""
+    kind, node, _ = expr
+    v, t = node.get("value"), node.get("dataType")
+    if kind != "Literal" or v is None:
+        return None
+    if t in _INTEGRAL:
+        return int(v)
+    if t == "date":
+        return datetime.date.fromisoformat(v)
+    if t == "boolean":
+        return v == "true"
+    return v if t == "string" else None
+
+
+def _conjunct(expr: tuple, stats: dict) -> set:
+    """The truth values (None is SQL NULL) one conjunct can take over the
+    rows of a file: a column IS [NOT] NULL, or compared with a literal on
+    its right. Any other conjunct may take any."""
+    kind, _, kids = expr
+    if kind in ("IsNull", "IsNotNull"):
+        col = _column(kids[0], stats)
+        if col is None:
+            return _ANY
+        isnull = {True} if col[3] else {True, False} if col[2] else {False}
+        return isnull if kind == "IsNull" else {not x for x in isnull}
+    if kind not in _COMPARE:
+        return _ANY
+    op, col, lit = _COMPARE[kind], _column(kids[0], stats), _literal(kids[1])
+    if col is None or lit is None:
+        return _ANY
+    lo, hi, may_null, all_null = col
+    if all_null:
+        return {None}
+    out = {None} if may_null else set()
+    if lo is None:
+        return out | {True, False}
+    true, false = {
+        "=": (lo <= lit <= hi, not lo == hi == lit),
+        "<": (lo < lit, hi >= lit),
+        "<=": (lo <= lit, hi > lit),
+        ">": (hi > lit, lo <= lit),
+        ">=": (hi >= lit, lo < lit),
+    }[op]
+    return out | {v for v, can in ((True, true), (False, false)) if can}
+
+
+def _conjuncts(cond: tuple) -> list[tuple]:
+    kind, _, kids = cond
+    return [c for k in kids for c in _conjuncts(k)] if kind == "And" else [cond]
+
+
+def _delete_action(cond: tuple | None, stats: dict) -> str:
+    """What an eligible DELETE does to one file: ``keep`` it when some
+    conjunct of ``cond`` is never TRUE on its rows, ``drop`` it when every
+    conjunct is TRUE on every row, else ``cover`` it with a pending entry.
+    ``cond`` None is TRUE."""
+    if stats["rows"] == 0:
+        return "keep"
+    try:
+        truths = [_conjunct(c, stats) for c in _conjuncts(cond)] if cond else []
+    except (TypeError, ValueError):  # bounds that do not compare
+        return "cover"
+    if any(True not in t for t in truths):
+        return "keep"
+    return "drop" if all(t == {True} for t in truths) else "cover"
+
+
+def _uncover(deletes: list[dict], gone) -> list[dict]:
+    """Pending deletes with the files in ``gone`` taken out of coverage."""
+    out = []
+    for d in deletes:
+        files = [f for f in d["files"] if f not in gone]
+        if files:
+            out.append({**d, "files": files})
+    return out
+
+
 def delete_from_snapshot(
     spark: SparkSession, table_dir: str, predicate: str
 ) -> int:
-    """Row-level DELETE, copy-on-write: rewrite ONLY the data files that
-    contain matching rows (Iceberg's copy-on-write delete granularity).
+    """Row-level DELETE. The predicate is resolved against the table (a
+    bad column raises, publishing nothing) and optimized on the driver.
 
-    File selection is one scan with the predicate pushed down: the
-    matching rows' ``_metadata.file_path`` values are gathered by an
-    ``observe`` (a set, so task retries cannot add duplicates) while the
-    scan drains to the ``noop`` sink. Untouched files carry over into the
-    new manifest by reference (zero I/O for them). The rewritten files
-    hold the touched files' surviving rows. Old versions still see the
-    pre-delete data (time travel is unaffected; physical reclaim stays
-    expire_snapshots' job).
-    """
-    from urllib.parse import unquote, urlparse
+    When the optimized predicate stays in the safe set, the DELETE is
+    merge-on-read and runs no Spark job: each live file is kept, dropped
+    or covered by one new pending entry, decided from its manifest stats
+    (see the module docstring). When no file can match — or the optimizer
+    proves the predicate never TRUE — it is a no-op returning the parent.
 
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
+    Otherwise it is copy-on-write: rewrite ONLY the data files that hold
+    matching live rows (Iceberg's copy-on-write granularity). File
+    selection is one scan with the predicate pushed down: the matching
+    rows' ``_metadata.file_path`` values are gathered by an ``observe``
+    (a set, so task retries cannot add duplicates) while the scan drains
+    to the ``noop`` sink. Untouched files carry over by reference; the
+    rewritten files hold the touched files' surviving rows, with their
+    pending deletes applied. A predicate that matches no live row
+    returns the parent.
+
+    Either way old versions still see the pre-delete data (time travel is
+    unaffected; physical reclaim stays expire_snapshots' job)."""
+    from pyspark.errors import AnalysisException
+
+    from lakehouse_variance_spark.memo import memo
 
     parent = _main_head(table_dir)
     manifest = _read_manifest(table_dir, parent)
+    files = manifest["files"]
+    schema = _table_schema(manifest)
+    # Plan over an empty RDD of the table's schema: the same resolution
+    # as the file scan, without building a file index. A predicate it
+    # cannot resolve (a bad column, or one on the scan's _metadata) goes
+    # to the copy-on-write scan, which raises for the bad column.
+    relation = memo(
+        spark,
+        ("snapshots.schema_relation", json.dumps(manifest["schema"], sort_keys=True)),
+        lambda: spark.createDataFrame(spark.sparkContext.emptyRDD(), schema),
+    )
+    try:
+        plan = relation.filter(predicate)._jdf.queryExecution().optimizedPlan()
+    except AnalysisException:
+        return _delete_copy_on_write(spark, table_dir, parent, manifest, predicate)
+    kind = plan.getClass().getSimpleName()
+    if kind == "LocalRelation":
+        return parent  # the predicate folded to FALSE or NULL
+    cond, where = None, "true"  # a bare relation: it folded to TRUE
+    if kind == "Filter":
+        cond = _tree(json.loads(plan.condition().toJSON()))
+        where = plan.condition().sql()
+    jvm = spark.sparkContext._jvm
+    to_type = jvm.org.apache.spark.sql.types.DataType.fromJson
+
+    def can_up_cast(src, dst) -> bool:
+        return jvm.org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(
+            to_type(json.dumps(src)), to_type(json.dumps(dst))
+        )
+
+    if kind not in ("Filter", "LogicalRDD") or (
+        cond is not None
+        and _safe_type(cond, set(schema.fieldNames()), can_up_cast) is None
+    ):
+        return _delete_copy_on_write(spark, table_dir, parent, manifest, predicate)
+    stats = _field(manifest, "file_stats")
+    actions = {f: _delete_action(cond, stats[f]) for f in files}
+    drop = {f for f in files if actions[f] == "drop"}
+    cover = [f for f in files if actions[f] == "cover"]
+    if not drop and not cover:
+        return parent  # the stats prove no file can match
+    deletes = _uncover(manifest["deletes"], drop)
+    if cover:
+        deletes.append({"where": where, "files": cover})
+    return _publish(
+        table_dir,
+        parent=parent,
+        operation=f"delete-where({predicate})",
+        schema=manifest["schema"],
+        base={
+            "files": [f for f in files if f not in drop],
+            "file_stats": stats,
+            "deletes": deletes,
+        },
+    )
+
+
+def _delete_copy_on_write(
+    spark: SparkSession,
+    table_dir: str,
+    parent: int,
+    manifest: dict,
+    predicate: str,
+) -> int:
+    """The copy-on-write DELETE ``delete_from_snapshot`` describes."""
+    from urllib.parse import unquote, urlparse
+
+    from pyspark.sql import Observation
+
+    if not manifest["files"]:
+        # every file was deleted whole: nothing to match, and an empty
+        # table has no _metadata column to select. Analysing the filter
+        # still raises for a bad column.
+        _scan(spark, manifest, []).filter(predicate)
+        return parent
     obs = Observation()
     (
-        read_snapshot(spark, table_dir, parent)
+        _live_scan(spark, manifest, manifest["files"])
         .filter(predicate)
         .select("_metadata.file_path")
         .observe(obs, F.collect_set("file_path").alias("files"))
@@ -620,70 +1028,56 @@ def delete_from_snapshot(
                 "silent no-op DELETE"
             )
         return parent  # predicate matched no rows — delete is a no-op
-    version = current_version(table_dir) + 1
-    commit_id = uuid.uuid4().hex
-    data_dir = Path(table_dir) / "data" / f"c{version}-{commit_id[:8]}"
     # DELETE semantics remove rows where the predicate is TRUE; rows where
     # it evaluates NULL must SURVIVE. A bare NOT(pred) filter drops them
     # (NOT NULL is NULL → filtered out) — coalesce to FALSE first.
     # The survivors scan uses the TABLE's schema: a touched file from
     # before a schema evolution lacks later-added columns, which read as
     # NULL instead of failing to resolve in the predicate.
-    survivors = _scan(spark, manifest, sorted(touched_paths)).filter(
+    survivors = _live_scan(spark, manifest, sorted(touched_paths)).filter(
         f"NOT coalesce({predicate}, false)"
     )
-    survivors.write.mode("error").parquet(str(data_dir))
-    new_files = sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file())
-    v = _commit(
+    return _publish(
         table_dir,
-        {
-            "version": version,
-            "parent": parent,
-            "operation": f"delete-where({predicate})",
-            "commit_id": commit_id,
-            "schema": manifest["schema"],
-            "files": keep_files + new_files,
+        parent=parent,
+        operation=f"delete-where({predicate})",
+        schema=manifest["schema"],
+        base={
+            "files": keep_files,
+            "file_stats": _field(manifest, "file_stats"),
+            "deletes": _uncover(manifest["deletes"], touched_paths),
         },
+        new=survivors,
     )
-    _advance_branch(table_dir, "main", v)
-    return v
 
 
 def optimize_snapshot(spark: SparkSession, table_dir: str) -> int:
-    """Small-file compaction as a table-service commit (OPTIMIZE): read the
-    current visible file set, rewrite it as right-sized files, publish ONE
-    new version whose manifest lists only the compacted files. Readers of
-    old versions keep the original files; expire_snapshots reclaims them
-    once out of retention."""
-    import pyarrow.parquet as pq
-
+    """Small-file compaction as a table-service commit (OPTIMIZE): rewrite
+    the current version's live rows — pending deletes folded in — as
+    right-sized files, and publish ONE new version listing only them,
+    with no deletes pending. The output count comes from the manifest's
+    row counts (no footer is opened; rows that pending deletes remove
+    still count), and the rows are bin-packed with
+    ``coalesce``: one job, no shuffle, and the input order kept, so each
+    output file holds a narrow key range. Readers of old versions keep
+    the original files; expire_snapshots reclaims them once out of
+    retention."""
     parent = _main_head(table_dir)
     manifest = _read_manifest(table_dir, parent)
-    df = read_snapshot(spark, table_dir, parent)
-    # Row count from the parquet footers, not a count job over the data.
-    n_rows = sum(pq.read_metadata(f).num_rows for f in manifest["files"])
+    files = manifest["files"]
+    n_rows = sum(s["rows"] for s in _field(manifest, "file_stats").values())
     # ~128 MB-equivalent sizing downscaled to fixture volumes: one output
     # file per 64k rows, minimum 1 (the production knob is bytes-based via
     # spark.sql.files.maxRecordsPerFile / target-file-size).
     n_out = max(1, n_rows // 65536)
-    version = current_version(table_dir) + 1
-    commit_id = uuid.uuid4().hex
-    data_dir = Path(table_dir) / "data" / f"c{version}-{commit_id[:8]}"
-    df.repartition(n_out).write.mode("error").parquet(str(data_dir))
-    new_files = sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file())
-    v = _commit(
+    return _publish(
         table_dir,
-        {
-            "version": version,
-            "parent": parent,
-            "operation": f"optimize({len(manifest['files'])}->{len(new_files)})",
-            "commit_id": commit_id,
-            "schema": manifest["schema"],
-            "files": new_files,
-        },
+        parent=parent,
+        operation=f"optimize({len(files)} files)",
+        schema=manifest["schema"],
+        base=_NOTHING,
+        new=_live_scan(spark, manifest, files).coalesce(n_out),
     )
-    _advance_branch(table_dir, "main", v)
-    return v
 
 
 def remove_orphan_files(
@@ -719,14 +1113,12 @@ def remove_orphan_files(
 def files_table(spark: SparkSession, table_dir: str) -> DataFrame:
     """Iceberg's ``table.files`` metadata table: one row per data file
     visible at the current mainline version, with size and row count from
-    the parquet footer (no data read — footer metadata only)."""
-    import pyarrow.parquet as pq
-
+    the manifest's stats (no data file or footer is opened)."""
     v = _main_head(table_dir)
-    rows = []
-    for f in _read_manifest(table_dir, v)["files"]:
-        meta = pq.read_metadata(f)
-        rows.append((f, meta.num_rows, Path(f).stat().st_size))
+    rows = [
+        (f, st["rows"], st["bytes"])
+        for f, st in _field(_read_manifest(table_dir, v), "file_stats").items()
+    ]
     return spark.createDataFrame(
         rows, "file_path string, record_count bigint, file_size_bytes bigint"
     )
@@ -780,7 +1172,7 @@ def read_version_changes(
     new_files = [f for f in manifest["files"] if f not in old]
     if not new_files:
         raise ValueError("no appended files in range")
-    return _scan(spark, manifest, new_files)
+    return _live_scan(spark, manifest, new_files)
 
 
 def publish_branch(table_dir: str, branch: str) -> int:

@@ -67,7 +67,8 @@ def _contract_priority(name: str) -> tuple:
     return (3, ())
 
 
-def main() -> None:
+def priority_order() -> list[str]:
+    """The SAMPLING_PRIORITY tuple the committed records imply."""
     # "Certified" = the driver has seen the query WITH its oracle (a
     # hash_match verdict, true or false) or as a rows-only op it checked.
     # A query sampled only as err == 'no_oracle' that has SINCE gained an
@@ -115,8 +116,12 @@ def main() -> None:
                     order.append(cand)
                     inserted.add(cand)
                     break
-    fresh = order
-    assert len(fresh) == len(set(fresh)), "duplicate in SAMPLING_PRIORITY"
+    assert len(order) == len(set(order)), "duplicate in SAMPLING_PRIORITY"
+    return order
+
+
+def main() -> None:
+    fresh = priority_order()
     out = os.path.join(HERE, "lakehouse_variance_spark", "sampling_order.py")
     with open(out, "w") as f:
         f.write(

@@ -246,9 +246,42 @@ def test_expire_retention_is_per_ref_not_global(spark, tmp_path):
         read_snapshot(spark, t, 3).count()
 
 
+def test_delete_from_snapshot_merge_on_read(spark, tmp_path):
+    """A safe-set DELETE writes no data file: it records a pending delete
+    over the files its stats cannot rule out, every read applies it, and
+    time travel still sees the old rows."""
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    orders = _orders(spark)
+    write_snapshot(orders.filter("o_orderkey % 2 = 0").repartition(2), t,
+                   mode="overwrite")
+    write_snapshot(orders.filter("o_orderkey % 2 = 1").repartition(2), t,
+                   mode="append")
+    before = snap._read_manifest(t, current_version(t))["files"]
+    n_before = read_snapshot(spark, t).count()
+    n_odd = read_snapshot(spark, t).filter("o_orderkey % 2 = 1").count()
+    v = snap.delete_from_snapshot(spark, t, "o_orderkey % 2 = 1")
+    after = snap._read_manifest(t, v)
+    # no file written or removed: the bounds of o_orderkey % 2 are
+    # unknown, so every file is covered by the one pending entry
+    assert after["files"] == before
+    assert [d["files"] for d in after["deletes"]] == [before]
+    assert read_snapshot(spark, t).count() == n_before - n_odd
+    assert read_snapshot(spark, t).filter("o_orderkey % 2 = 1").count() == 0
+    # time travel: pre-delete version still has the odd rows
+    assert read_snapshot(spark, t, v - 1).filter(
+        "o_orderkey % 2 = 1"
+    ).count() == n_odd
+    # no-op delete (the stats bound o_orderkey below) returns the same version
+    assert snap.delete_from_snapshot(spark, t, "o_orderkey < 0") == v
+    assert current_version(t) == v
+
+
 def test_delete_from_snapshot_copy_on_write(spark, tmp_path):
-    """DELETE rewrites only the files containing matches; untouched files
-    carry over by reference, and time travel still sees the old rows."""
+    """A DELETE outside the safe set rewrites only the files containing
+    matches; untouched files carry over by reference, and time travel
+    still sees the old rows."""
     from lakehouse_variance_spark.sources import snapshots as snap
 
     t = str(tmp_path / "t")
@@ -258,10 +291,13 @@ def test_delete_from_snapshot_copy_on_write(spark, tmp_path):
                    mode="overwrite")
     write_snapshot(orders.filter("o_orderkey % 2 = 1").repartition(2), t,
                    mode="append")
+    # LIKE is outside the safe set; every TPC-H priority holds a '-'
+    pred = "o_orderkey % 2 = 1 AND o_orderpriority LIKE '%-%'"
     before = snap._read_manifest(t, current_version(t))["files"]
     n_before = read_snapshot(spark, t).count()
     n_odd = read_snapshot(spark, t).filter("o_orderkey % 2 = 1").count()
-    v = snap.delete_from_snapshot(spark, t, "o_orderkey % 2 = 1")
+    assert read_snapshot(spark, t).filter(pred).count() == n_odd
+    v = snap.delete_from_snapshot(spark, t, pred)
     after = snap._read_manifest(t, v)["files"]
     # even files (commit 1) carried over by reference
     assert set(f for f in before if "/c1-" in f) <= set(after)
@@ -481,13 +517,12 @@ def _assert_schema_parity(spark, t, v):
     assert _nullable(got) == _nullable(inferred), f"v{v}"
 
 
-def test_manifest_schema_matches_merge_inference_on_every_commit(
-    spark, tmp_path
-):
-    """Every commit path records the schema a mergeSchema read of its
-    files would infer: appends that add, omit and reorder columns (and
-    widen a nested struct, an array and a map), overwrite, delete,
-    optimize, rollback, branch commits and both streaming sinks."""
+def _commit_every_path(spark, tmp_path) -> list[tuple[str, list[int]]]:
+    """Tables built through every commit path, with the versions each
+    holds: appends that add, omit and reorder columns (and widen a nested
+    struct, an array and a map), overwrite, a merge-on-read and a
+    copy-on-write delete, optimize, rollback, a branch commit and both
+    streaming sinks."""
     from lakehouse_variance_spark.sources import snapshots as snap
 
     t = str(tmp_path / "t")
@@ -508,6 +543,7 @@ def test_manifest_schema_matches_merge_inference_on_every_commit(
         write_snapshot(mk([("z", 50, 5)], "c string, a long, id long"), t),
     ]
     versions.append(snap.delete_from_snapshot(spark, t, "c = 'x'"))
+    versions.append(snap.delete_from_snapshot(spark, t, "c LIKE 'y%'"))
     versions.append(snap.optimize_snapshot(spark, t))
     versions.append(rollback(t, versions[2]))
     snap.create_branch(t, "dev")
@@ -516,8 +552,6 @@ def test_manifest_schema_matches_merge_inference_on_every_commit(
     versions.append(write_snapshot(mk([(7, "w")], "k int, v string"), t,
                                    mode="overwrite"))
     assert len(set(versions)) == len(versions) == current_version(t)
-    for v in versions:
-        _assert_schema_parity(spark, t, v)
     assert read_snapshot(spark, t, versions[3]).columns == [
         "id", "a", "s", "arr", "m", "c"]
 
@@ -528,8 +562,76 @@ def test_manifest_schema_matches_merge_inference_on_every_commit(
     merge = snap.snapshot_merge_writer(
         s, lambda b, state: b.unionByName(state, allowMissingColumns=True))
     merge(mk([(3, True)], "id long, flag boolean"), 2)
-    for v in range(1, current_version(s) + 1):
-        _assert_schema_parity(spark, s, v)
+    return [(t, versions), (s, list(range(1, current_version(s) + 1)))]
+
+
+def test_manifest_schema_matches_merge_inference_on_every_commit(
+    spark, tmp_path
+):
+    """Every commit path records the schema a mergeSchema read of its
+    files would infer."""
+    for t, versions in _commit_every_path(spark, tmp_path):
+        for v in versions:
+            _assert_schema_parity(spark, t, v)
+
+
+def test_manifest_stats_match_footers_on_every_commit(spark, tmp_path):
+    """Every commit path records, per listed file, the row count, size and
+    per-column [min, max, null count] of the data the file holds, and
+    None exactly for the columns whose type carries no usable bound."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    bounded = (pa.types.is_integer, pa.types.is_floating, pa.types.is_string,
+               pa.types.is_date32, pa.types.is_boolean)
+    checked = 0
+    for t, versions in _commit_every_path(spark, tmp_path):
+        for v in versions:
+            manifest = snap._read_manifest(t, v)
+            assert set(manifest["file_stats"]) == set(manifest["files"]), f"v{v}"
+            for f in manifest["files"]:
+                got = manifest["file_stats"][f]
+                data = pq.read_table(f)
+                assert got["rows"] == data.num_rows, f
+                assert got["bytes"] == os.path.getsize(f), f
+                assert sorted(got["columns"]) == sorted(data.column_names), f
+                for name, col in zip(data.column_names, data.columns):
+                    want = None
+                    if any(ok(col.type) for ok in bounded):
+                        mm = pc.min_max(col).as_py()
+                        lo, hi = mm["min"], mm["max"]
+                        if isinstance(lo, datetime.date):
+                            lo, hi = lo.isoformat(), hi.isoformat()
+                        want = [lo, hi, col.null_count]
+                    assert got["columns"][name] == want, (f, name)
+                    checked += 1
+    assert checked > 40
+
+
+def test_stats_decide_delete_on_date_bounds(spark, tmp_path):
+    """A date conjunct is decided from the manifest's bounds: a literal
+    past every bound is a no-op, and a cut between two files drops the
+    one before it whole and keeps the other untouched."""
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    for start in ("1999-12-01", "2000-06-01"):
+        write_snapshot(spark.sql(
+            f"SELECT id, date_add(DATE'{start}', CAST(id AS INT)) AS d "
+            "FROM range(10)").coalesce(1), t)
+    v = current_version(t)
+    assert snap.delete_from_snapshot(spark, t, "d > DATE'2001-01-01'") == v
+    cut = snap.delete_from_snapshot(spark, t, "d < DATE'2000-01-01'")
+    manifest = snap._read_manifest(t, cut)
+    assert manifest["deletes"] == []
+    assert manifest["files"] == snap._read_manifest(t, v)["files"][1:]
+    assert read_snapshot(spark, t).count() == 10
 
 
 def _jobs_launched(spark, fn):
@@ -547,10 +649,15 @@ def _jobs_launched(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_snapshot_planning_job_ceilings(spark, tmp_path):
+def test_snapshot_planning_job_ceilings(spark, tmp_path, monkeypatch):
     """Planning is metadata-only: building a read starts no job (no
-    schema inference), a DELETE finds its files in one scan plus the
-    rewrite, and OPTIMIZE sizes its output from the footers."""
+    schema inference), a safe-set DELETE and a no-op the stats prove
+    start none, a copy-on-write DELETE finds its files in one scan plus
+    the rewrite, and OPTIMIZE bin-packs in one job. OPTIMIZE and
+    files_table size from the manifest: no footer but OPTIMIZE's own new
+    files' is opened."""
+    import pyarrow.parquet as pq
+
     from lakehouse_variance_spark.sources import snapshots as snap
 
     t = str(tmp_path / "t")
@@ -563,9 +670,42 @@ def test_snapshot_planning_job_ceilings(spark, tmp_path):
     n_del = read_snapshot(spark, t).filter("o_orderkey % 3 = 1").count()
     assert _jobs_launched(
         spark, lambda: snap.delete_from_snapshot(spark, t, "o_orderkey % 3 = 1")
+    ) == 0
+    v = current_version(t)
+    got = []
+    assert _jobs_launched(
+        spark,
+        lambda: got.append(snap.delete_from_snapshot(spark, t, "o_orderkey < 0")),
+    ) == 0
+    assert got == [v] and current_version(t) == v
+    n_like = read_snapshot(spark, t).filter(
+        "o_orderpriority LIKE '1-%' AND o_orderkey % 3 = 0").count()
+    assert _jobs_launched(
+        spark,
+        lambda: snap.delete_from_snapshot(
+            spark, t, "o_orderpriority LIKE '1-%' AND o_orderkey % 3 = 0"),
     ) <= 2
-    assert _jobs_launched(spark, lambda: snap.optimize_snapshot(spark, t)) <= 2
-    assert read_snapshot(spark, t).count() == n - n_del
+
+    opened = []
+    real = pq.ParquetFile
+
+    def recording(path, *args, **kwargs):
+        opened.append(str(path))
+        return real(path, *args, **kwargs)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("footer read")
+
+    monkeypatch.setattr(pq, "read_metadata", refuse)
+    monkeypatch.setattr(pq, "ParquetFile", recording)
+    assert _jobs_launched(spark, lambda: snap.optimize_snapshot(spark, t)) == 1
+    new_files = snap._read_manifest(t, current_version(t))["files"]
+    assert sorted(opened) == sorted(new_files)
+    opened.clear()
+    files = snap.files_table(spark, t).collect()
+    assert opened == []
+    assert sum(r.record_count for r in files) == n - n_del - n_like
+    assert read_snapshot(spark, t).count() == n - n_del - n_like
 
 
 def test_append_type_conflict_publishes_nothing(spark, tmp_path):
@@ -597,3 +737,165 @@ def test_manifest_without_schema_is_refused(spark, tmp_path):
     path.write_text(json.dumps(manifest))
     with pytest.raises(ValueError, match="'schema'"):
         read_snapshot(spark, t)
+
+
+def test_manifest_without_stats_or_deletes_is_refused(spark, tmp_path):
+    """A manifest written before per-file stats and pending deletes is
+    refused by reads and by every commit, before any file is written."""
+    import json
+
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame([(1,)], "id long")
+    write_snapshot(df, t)
+    path = snap._manifest_path(t, 1)
+    manifest = json.loads(path.read_text())
+    del manifest["file_stats"], manifest["deletes"]
+    path.write_text(json.dumps(manifest))
+    with pytest.raises(ValueError, match="'deletes'"):
+        read_snapshot(spark, t)
+    for op in (
+        lambda: write_snapshot(df, t),
+        lambda: snap.delete_from_snapshot(spark, t, "id = 1"),
+        lambda: snap.optimize_snapshot(spark, t),
+        lambda: snap.files_table(spark, t),
+        lambda: snap.rollback(t, 1),
+    ):
+        with pytest.raises(ValueError, match="'file_stats'"):
+            op()
+    assert current_version(t) == 1
+    assert len(list((tmp_path / "t" / "data").iterdir())) == 1
+
+
+_MODEL_TYPES = {"id": "long", "k": "int", "s": "string", "e": "string"}
+
+
+def _model_rows(rng, ids, cols):
+    return [
+        {
+            "id": i,
+            "k": rng.choice([0, 1, 2, 3, 4, None]),
+            "s": rng.choice(["a", "b", "c", "cx", None]),
+            **({"e": rng.choice(["x", "y", None])} if "e" in cols else {}),
+        }
+        for i in ids
+    ]
+
+
+def _model_frame(spark, rows, cols):
+    return spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows],
+        ", ".join(f"{c} {_MODEL_TYPES[c]}" for c in cols),
+    )
+
+
+def _on(col, f):
+    """A comparison on one column of a model row, NULL when it is NULL
+    (a column the row predates reads as NULL)."""
+    return lambda r: None if r.get(col) is None else f(r[col])
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_merge_on_read_matches_row_model(spark, tmp_path, seed):
+    """Seeded appends (one adds a column), safe-set and copy-on-write
+    deletes, OPTIMIZE, rollback, and a branch commit plus publish; after
+    every commit each version's rows equal an in-memory model's. Covers
+    rows whose predicate is NULL (they survive), a delete on the evolved
+    column, a whole-file delete, copy-on-write over files with a pending
+    delete, and a bad column (raises, publishes nothing)."""
+    import random
+
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    rng = random.Random(seed)
+    t = str(tmp_path / "t")
+    model: dict[int, list[dict]] = {}
+    cols: dict[int, list[str]] = {}
+
+    def check_all():
+        for v in sorted(model):
+            df = read_snapshot(spark, t, v)
+            assert df.columns == cols[v], f"v{v}"
+            got = sorted((tuple(r) for r in df.collect()), key=repr)
+            want = sorted(
+                (tuple(row.get(c) for c in cols[v]) for row in model[v]),
+                key=repr,
+            )
+            assert got == want, f"v{v}"
+
+    def commit(v, rows, columns):
+        assert v not in model
+        model[v], cols[v] = rows, columns
+        check_all()
+
+    def delete(sql, matches, merge_on_read):
+        head = snap._main_head(t)
+        parent_files = set(snap._read_manifest(t, head)["files"])
+        v = snap.delete_from_snapshot(spark, t, sql)
+        assert v != head, sql
+        files = set(snap._read_manifest(t, v)["files"])
+        assert (files <= parent_files) == merge_on_read, sql
+        commit(v, [r for r in model[head] if matches(r) is not True], cols[head])
+        return v
+
+    base = ["id", "k", "s"]
+    rows = _model_rows(rng, range(40), base)
+    commit(write_snapshot(_model_frame(spark, rows, base).repartition(2), t,
+                          mode="overwrite"), rows, base)
+    block = _model_rows(rng, range(1000, 1020), base)  # one file: id 1000-1019
+    commit(write_snapshot(_model_frame(spark, block, base).coalesce(1), t),
+           model[1] + block, base)
+    a = rng.choice([1, 2, 3])
+    delete(f"k = {a}", _on("k", lambda k: k == a), True)
+    c = rng.choice(["a", "b"])
+    delete(f"s = '{c}'", _on("s", lambda s: s == c), True)
+    whole = delete("id >= 1000 AND id < 1020", lambda r: 1000 <= r["id"] < 1020,
+                   True)
+    assert not any("/c2-" in f for f in snap._read_manifest(t, whole)["files"])
+
+    evolved = base + ["e"]
+    more = _model_rows(rng, range(2000, 2030), evolved)
+    head = snap._main_head(t)
+    after_evolve = write_snapshot(_model_frame(spark, more, evolved).repartition(2), t)
+    commit(after_evolve, model[head] + more, evolved)
+    delete("e = 'x'", _on("e", lambda e: e == "x"), True)
+    # the first files predate e: it is NULL in every row of them
+    delete("k IN (0, 4) AND e IS NULL",
+           lambda r: _on("k", lambda k: k in (0, 4))(r) and r.get("e") is None,
+           True)
+    # copy-on-write over files that carry pending deletes
+    delete("s LIKE 'c%'", _on("s", lambda s: s.startswith("c")), False)
+    m = rng.choice([0, 1, 2])
+    delete(f"id % 3 = {m} AND k IS NOT NULL",
+           lambda r: r["id"] % 3 == m and r["k"] is not None, True)
+    head = snap._main_head(t)
+    opt = snap.optimize_snapshot(spark, t)
+    assert snap._read_manifest(t, opt)["deletes"] == []
+    commit(opt, model[head], cols[head])
+    delete("s IS NULL OR k = 4",
+           lambda r: r["s"] is None or _on("k", lambda k: k == 4)(r), True)
+
+    back = rollback(t, after_evolve)
+    commit(back, model[after_evolve], evolved)
+    snap.create_branch(t, "dev")
+    staged = _model_rows(rng, range(3000, 3010), evolved)
+    dev = snap.commit_to_branch(_model_frame(spark, staged, evolved), t, "dev")
+    commit(dev, model[back] + staged, evolved)
+    assert snap.publish_branch(t, "dev") == dev
+    delete("k <=> 0 OR upper(s) = 'B'",
+           lambda r: r["k"] == 0 or _on("s", lambda s: s.upper() == "B")(r),
+           False)
+
+    # OPTIMIZE packs the rows into one file and deleting every row drops
+    # it: the table has no file left, a copy-on-write DELETE on it is a
+    # no-op, a bad column still raises, and OPTIMIZE still commits
+    head = snap._main_head(t)
+    commit(snap.optimize_snapshot(spark, t), model[head], cols[head])
+    gone = delete("id >= 0", lambda r: True, True)
+    assert snap._read_manifest(t, gone)["files"] == []
+    assert snap.delete_from_snapshot(spark, t, "s LIKE 'c%'") == gone
+    with pytest.raises(Exception, match="nope"):
+        snap.delete_from_snapshot(spark, t, "nope = 1")
+    assert current_version(t) == gone and snap._main_head(t) == gone
+    commit(snap.optimize_snapshot(spark, t), [], cols[gone])
