@@ -69,6 +69,11 @@ every SF either way — 0 rows on both engines is still a verified match.
 
 from __future__ import annotations
 
+import json
+import operator
+from functools import reduce
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_variance_spark.plans.synth_common import (
@@ -80,7 +85,7 @@ from lakehouse_variance_spark.plans.tpcds_schema import (
     register_tpcds_views,
 )
 from lakehouse_variance_spark.registry import register
-from lakehouse_variance_spark.session import env_int
+from lakehouse_variance_spark.sources.snapshots import catalyst_tree, conjuncts
 
 TPCDS_TEXTS: dict[str, str] = {}
 
@@ -4990,186 +4995,37 @@ LIMIT 100
 
 
 # ---------------------------------------------------------------------------
-# Harness-level runtime fact prunes — the r11 q72 transitive-date-prune
-# pattern, generalized (r12, guide §3.2/§6).  Each entry shadows fact views
-# with a filter PROVABLY implied by the query's own WHERE clause through its
-# dimension equi-joins: the dimension keys are collected once per session
-# and catalog token — a bounded driver list, the scheduler-inputs precedent —
-# and fact rows outside the set cannot satisfy the query's own join+filter
-# chain, so results are unchanged (the oracle runs the pure text and the
-# hash gate proves it).  This is the manual form of the runtime filter
-# Catalyst's bloom-filter injection (SPARK-32268) declines to build here (no
-# table stats; filtered-dimension size estimates over its thresholds): the
-# key set reaches the parquet scan as PushedFilters — a BETWEEN when the sk
-# run is contiguous (row-group min/max skipping), an In list otherwise —
-# where the before-plans (plans/r12/*_before.txt) show full-table fact scans
-# with IsNotNull-only pushdown.
-#
-# Query texts stay verbatim; each dim_sql mirrors the query's own dimension
-# predicates literally (literal drift would over- or under-prune and the
-# oracle hash gate would catch it).  The shadow is scoped to ONE spark.sql
-# call: spark.sql analyzes eagerly (the view plan is inlined at Dataset
-# creation), so re-registering the captured original right after restores
-# the catalog to exactly the state the ownership token describes — no
-# catalog_state_dirty, no full re-registration for the next query (r11 paid
-# that after q72; r12 drops it).
-#
-# query -> ((dim_sql, ((view, fact_column), ...)), ...)
-_FACT_PRUNES: dict[str, tuple] = {
-    # q4: every year_total consumer pins dyear IN (2001, 2001+1); the CTE's
-    # 6 pushed instances each scan a FULL fact table (only the date_dim
-    # side is filtered — plans/r12/tpcds_q4_before.txt).
-    "tpcds_q4": (
-        (
-            "SELECT d_date_sk FROM date_dim WHERE d_year IN (2001, 2001 + 1)",
-            (
-                ("store_sales", "ss_sold_date_sk"),
-                ("catalog_sales", "cs_sold_date_sk"),
-                ("web_sales", "ws_sold_date_sk"),
-            ),
-        ),
-    ),
-    # q51/q67: d_month_seq BETWEEN 1200 AND 1200 + 11 via ss/ws_sold_date_sk.
-    "tpcds_q51": (
-        (
-            "SELECT d_date_sk FROM date_dim "
-            "WHERE d_month_seq BETWEEN 1200 AND 1200 + 11",
-            (
-                ("web_sales", "ws_sold_date_sk"),
-                ("store_sales", "ss_sold_date_sk"),
-            ),
-        ),
-    ),
-    "tpcds_q67": (
-        (
-            "SELECT d_date_sk FROM date_dim "
-            "WHERE d_month_seq BETWEEN 1200 AND 1200 + 11",
-            (("store_sales", "ss_sold_date_sk"),),
-        ),
-    ),
-    # q78: the outer WHERE pins ss_sold_year = 2000 and the ws/cs branches
-    # join on ws/cs_sold_year = ss_sold_year — all three channels only
-    # contribute d_year = 2000 groups.  The returns sides join per
-    # order/item (not date) and are NOT pruned.
-    "tpcds_q78": (
-        (
-            "SELECT d_date_sk FROM date_dim WHERE d_year = 2000",
-            (
-                ("web_sales", "ws_sold_date_sk"),
-                ("catalog_sales", "cs_sold_date_sk"),
-                ("store_sales", "ss_sold_date_sk"),
-            ),
-        ),
-    ),
-    # q64: every fact is equi-joined (directly or via cs_ui's per-item
-    # HAVING groups) to the color/price-filtered item; store_sales is
-    # additionally date-bound by cs1/cs2's syear IN (1999, 1999 + 1).
-    "tpcds_q64": (
-        (
-            "SELECT i_item_sk FROM item WHERE i_color IN "
-            "('purple', 'burlywood', 'indian', 'spring', 'floral', 'medium') "
-            "AND i_current_price BETWEEN 64 AND 64 + 10 "
-            "AND i_current_price BETWEEN 64 + 1 AND 64 + 15",
-            (
-                ("store_sales", "ss_item_sk"),
-                ("store_returns", "sr_item_sk"),
-                ("catalog_sales", "cs_item_sk"),
-                ("catalog_returns", "cr_item_sk"),
-            ),
-        ),
-        (
-            "SELECT d_date_sk FROM date_dim WHERE d_year IN (1999, 1999 + 1)",
-            (("store_sales", "ss_sold_date_sk"),),
-        ),
-    ),
-    # q22: inventory bound by d_month_seq BETWEEN 1200 AND 1200 + 11 —
-    # the 100x probe's worst family (1.31B-row inventory, SCALE.md).
-    "tpcds_q22": (
-        (
-            "SELECT d_date_sk FROM date_dim "
-            "WHERE d_month_seq BETWEEN 1200 AND 1200 + 11",
-            (("inventory", "inv_date_sk"),),
-        ),
-    ),
-    # q39: the inv CTE pins d_year = 2001 and both consumers pin
-    # d_moy IN (1, 1 + 1); per-(warehouse,item,moy) groups for other
-    # months are dropped by the consumers' own filters.
-    "tpcds_q39": (
-        (
-            "SELECT d_date_sk FROM date_dim "
-            "WHERE d_year = 2001 AND d_moy IN (1, 1 + 1)",
-            (("inventory", "inv_date_sk"),),
-        ),
-    ),
-    # q37/q82: inventory bound by the 60-day d_date window AND the
-    # manufact/price-filtered item; the probing sales fact is item-bound.
-    "tpcds_q37": (
-        (
-            "SELECT d_date_sk FROM date_dim WHERE d_date BETWEEN "
-            "cast('2000-02-01' AS DATE) AND "
-            "(cast('2000-02-01' AS DATE) + INTERVAL '60' DAY)",
-            (("inventory", "inv_date_sk"),),
-        ),
-        (
-            "SELECT i_item_sk FROM item WHERE i_current_price BETWEEN 68 "
-            "AND 68 + 30 AND i_manufact_id IN (677, 940, 694, 808)",
-            (
-                ("inventory", "inv_item_sk"),
-                ("catalog_sales", "cs_item_sk"),
-            ),
-        ),
-    ),
-    "tpcds_q82": (
-        (
-            "SELECT d_date_sk FROM date_dim WHERE d_date BETWEEN "
-            "cast('2000-05-25' AS DATE) AND "
-            "(cast('2000-05-25' AS DATE) + INTERVAL '60' DAY)",
-            (("inventory", "inv_date_sk"),),
-        ),
-        (
-            "SELECT i_item_sk FROM item WHERE i_current_price BETWEEN 62 "
-            "AND 62 + 30 AND i_manufact_id IN (869, 37, 788, 609)",
-            (
-                ("inventory", "inv_item_sk"),
-                ("store_sales", "ss_item_sk"),
-            ),
-        ),
-    ),
-    # q72 (r11's original): the inventory date constraint is TRANSITIVE
-    # (inv_date_sk -> d2, d2.d_week_seq = d1.d_week_seq, d1.d_year = 1999),
-    # which no static or runtime rule derives.
-    "tpcds_q72": (
-        (
-            "SELECT DISTINCT d_date_sk FROM date_dim WHERE d_week_seq "
-            "IN (SELECT d_week_seq FROM date_dim WHERE d_year = 1999)",
-            (("inventory", "inv_date_sk"),),
-        ),
-    ),
-}
-
-
-# Size gate, mirroring the application-side scan threshold Spark's own
-# runtime bloom-filter injection uses (SPARK-32268): a prune costs a
-# near-CONSTANT overhead (the shadow's catalog round trips + the enlarged
-# plan's analysis + the per-row-batch predicate) and pays PROPORTIONALLY to
-# the pruned fact's bytes, so below some size it is pure loss.  Interleaved
-# sf0.1 A/B (3 reps, min): the 6-9 MB sales facts LOSE 0.1-1.2 s per query
-# under every prune, while the 28 MB inventory family wins where the prune
-# feeds a fact-fact join or repeated aggregation (q72 1.45x, q37 1.73x,
-# q39 1.20x).  16 MB keeps the measured winners and exempts the measured
-# losers AT ANY scale factor (the gate reads the live Catalyst estimate, so
-# 10x data flips the sales facts in automatically); a deployment tunes
-# $SPARK_GRAFT_PRUNE_MIN_BYTES like Spark's own threshold confs.
-_PRUNE_MIN_FACT_BYTES = env_int("SPARK_GRAFT_PRUNE_MIN_BYTES", 16 << 20)
-# Key-count cap for NON-CONTIGUOUS key sets (contiguous runs collapse to a
-# two-literal BETWEEN and never hit this): a many-thousand-value In
-# expression costs analysis/pushdown superlinearly while its selectivity is
-# usually already poor — the 100x probe measured q64 at 114.7 s when its
-# item dimension scaled to a ~47k-value list, vs 7.4 s unpruned, while the
-# ~2.5k-value q37/q82 item lists still won 6.3x/2.5x at the same scale.
-# 4096 sits between the measured-fine 2.5k and the measured-disaster 47k;
-# the analog of Spark's own bloom-filter maxNumItems bound.
-_PRUNE_MAX_KEYS = env_int("SPARK_GRAFT_PRUNE_MAX_KEYS", 4096)
+# Harness-level runtime fact prunes.  For one spark.sql call, each fact view
+# of an opted-in query is shadowed by the key filter that the query's own
+# optimized plan implies:
+# * a fact column equi-joined (inner or left semi) to a filtered, fact-free
+#   dimension subtree takes that subtree's distinct join keys;
+# * keys carry across equi-join equivalence classes (q64's sr_item_sk and
+#   cr_item_sk via ss_item_sk/cs_item_sk = i_item_sk), projections, grouping
+#   and window-partition keys, but not across a limit, expand or union, nor
+#   into the null-supplying side of an outer join;
+# * an unfiltered dimension side is first semi-joined, on the join's other
+#   equi-conjuncts, with the filtered fact-free subtrees they reference
+#   (q72: inv_date_sk = d2.d_date_sk AND d1.d_week_seq = d2.d_week_seq);
+# * a view read more than once takes the union of its instances' key sets,
+#   and none if an instance is unconstrained (q72's catalog_returns) or the
+#   plan reads a relation inside a subquery expression.
+# Keys reach the parquet scan as PushedFilters (BETWEEN for a contiguous sk
+# run, else In), where Catalyst's runtime bloom filter (SPARK-32268) does
+# not fire.  Targets and keys are memoized per catalog token and query.
+_FACT_PRUNES = frozenset(
+    f"tpcds_q{n}" for n in (4, 22, 37, 39, 51, 64, 67, 72, 78, 82)
+)
+_FACT_VIEWS = ("store_sales", "store_returns", "catalog_sales",
+               "catalog_returns", "web_sales", "web_returns", "inventory")
+# Size gate, as Spark's own runtime filter has: a prune costs about the same
+# at any size and gains with the fact's bytes.  At sf0.1 the 6-9 MB sales
+# facts lost 0.1-1.2 s per query and the 28 MB inventory won (SCALE.md); the
+# gate reads Catalyst's live estimate, so more data lets the sales facts in.
+_PRUNE_MIN_FACT_BYTES = 16 << 20
+# Key cap for a NON-CONTIGUOUS key set: a ~47k-value In list made q64 15x
+# slower at the 100x probe, while ~2.5k-value lists still won (SCALE.md).
+_PRUNE_MAX_KEYS = 4096
 
 
 def _view_bytes(spark: SparkSession, view: str) -> int:
@@ -5187,61 +5043,186 @@ def _view_bytes(spark: SparkSession, view: str) -> int:
         return 1 << 62
 
 
-def _prune_keys(spark: SparkSession, dim_sql: str) -> tuple:
-    """The dimension keys ``dim_sql`` selects, memoized under the catalog
-    token: (lo, hi, None) for a contiguous key run, else (None, None,
-    sorted values)."""
+# Operators that pass each child row through unchanged or drop it whole.
+_ROW_LOCAL = {"Project", "Filter", "Sort", "Repartition",
+              "RepartitionByExpression", "RebalancePartitions"}
 
-    def collect() -> tuple:
-        vals = sorted(r[0] for r in spark.sql(dim_sql).collect())
-        if vals and vals[-1] - vals[0] + 1 == len(vals):
-            # Contiguous key run (the date_dim surrogate keys are ordinal):
-            # a two-sided range predicate, which parquet row-group min/max
-            # stats can skip on, instead of a hundreds-long In list.
-            return (vals[0], vals[-1], None)
-        return (None, None, vals)
 
-    return catalog_memo(spark, ("prune_keys", dim_sql), collect)
+class _KeyClass:
+    """Union-find class of equi-joined columns and the specs bounding it."""
+
+    def __init__(self):
+        self.parent, self.specs = self, []
+
+    def root(self) -> _KeyClass:
+        return self if self.parent is self else self.parent.root()
+
+
+def _walk(plan: tuple, fact_of: dict, instances: dict, path: tuple = ()):
+    """A toJSON plan subtree, bottom-up: its child ``path``, whether it reads
+    a fact or filters beyond IsNotNull, and the key class of each column
+    reaching it row for row; a fact scan adds to ``instances[view]``."""
+    kind, node, kids = plan
+    sides = [_walk(k, fact_of, instances, path + (i,)) for i, k in enumerate(kids)]
+    side = SimpleNamespace(path=path, kids=sides, classes={},
+                           facts=any(s.facts for s in sides),
+                           selective=any(s.selective for s in sides))
+    child = sides[0].classes if sides else {}
+    if kind == "LogicalRelation":
+        cols = [a[0] for a in node["output"]]
+        inst = {c["name"]: _KeyClass() for c in cols}
+        side.classes = {c["exprId"]["id"]: inst[c["name"]] for c in cols}
+        if cols[0]["name"] in fact_of:
+            instances.setdefault(fact_of[cols[0]["name"]], []).append(inst)
+            side.facts = True
+    elif kind in _ROW_LOCAL:
+        side.classes = dict(child)
+        side.selective |= kind == "Filter" and any(
+            c[0] != "IsNotNull" for c in conjuncts(catalyst_tree(node["condition"]))
+        )
+    elif kind in ("Aggregate", "Window", "WindowGroupLimit"):
+        keys = node.get("groupingExpressions", node.get("partitionSpec"))
+        kept = {e[0]["exprId"]["id"] for e in keys if "exprId" in e[0]}
+        side.classes = {i: c for i, c in child.items() if i in kept}
+    elif kind == "Join":
+        jt = node["joinType"]
+        join = (jt.get("object") or jt["product-class"]).split(".")[-1].rstrip("$")
+        if join in ("Inner", "Cross", "LeftSemi"):
+            side.classes = {**sides[0].classes, **sides[1].classes}
+            _join(side, node.get("condition"))
+        elif join in ("LeftOuter", "LeftAnti", "ExistenceJoin", "RightOuter"):
+            side.classes = dict(sides[join == "RightOuter"].classes)
+    for expr in node.get("projectList") or node.get("aggregateExpressions") or []:
+        e_kind, alias, e_kids = catalyst_tree(expr)  # `column AS name`
+        if e_kind == "Alias" and e_kids[0][0] == "AttributeReference":
+            src = side.classes.get(e_kids[0][1]["exprId"]["id"])
+            if src is not None:
+                side.classes[alias["exprId"]["id"]] = src
+    return side
+
+
+def _join(side, condition) -> None:
+    """Merge the key classes an inner or semi join's equi-conjuncts tie;
+    a fact column joined to a fact-free dimension side takes a
+    (dimension path, key column, semi-joins) spec of that side's keys."""
+    left, right = side.kids
+    classes, pairs = side.classes, []  # (left column, right column) ids
+    for kind, _, kids in conjuncts(catalyst_tree(condition)) if condition else []:
+        ids = [k[1]["exprId"]["id"] for k in kids if k[0] == "AttributeReference"]
+        if kind == "EqualTo" and len(ids) == 2 and all(i in classes for i in ids):
+            pairs.append(ids if ids[0] in left.classes else ids[::-1])
+    for a, b in pairs:
+        ra, rb = classes[a].root(), classes[b].root()
+        if ra is not rb:
+            rb.parent, ra.specs = ra, ra.specs + rb.specs
+    for dim, fact, flip in ((right, left, False), (left, right, True)):
+        if dim.facts or not fact.facts:
+            continue
+        oriented = [(b, a) if flip else (a, b) for a, b in pairs]
+        for f_col, d_col in oriented:
+            semi = tuple(
+                (other, leaf.path, f_other)
+                for f_other, other in oriented
+                if other != d_col and not dim.selective
+                and (leaf := _leaf(fact, f_other)) is not None and leaf.selective
+            )
+            if dim.selective or semi:
+                classes[f_col].root().specs.append((dim.path, d_col, semi))
+
+
+def _leaf(side, col: int):
+    """The fact-free subtree of ``side`` that yields ``col``, if any."""
+    while side is not None and side.facts:
+        side = next((k for k in side.kids if col in k.classes), None)
+    return side
+
+
+def _derive_prunes(spark: SparkSession, pure: DataFrame) -> tuple:
+    """(optimized plan, {fact view: ((column, per-instance specs), ...)})
+    of a query's pure DataFrame, by the rule above."""
+    plan = pure._jdf.queryExecution().optimizedPlan()
+    text = plan.toJSON()
+    nodes = json.loads(text)
+    scans = sum(n["class"].endswith(".LogicalRelation") for n in nodes)
+    if text.count('.LogicalRelation"') != scans:
+        return plan, {}  # a relation read inside a subquery expression
+    instances: dict[str, list] = {}
+    fact_of = {c: v for v in _FACT_VIEWS for c in spark.table(v).columns}
+    _walk(catalyst_tree(nodes), fact_of, instances)
+    targets = {}
+    for view, insts in instances.items():
+        specs = [{c: tuple(k.root().specs) for c, k in inst.items()
+                  if k.root().specs} for inst in insts]
+        cols = sorted(set.intersection(*map(set, specs)))
+        if cols:
+            targets[view] = tuple((c, tuple(s[c] for s in specs)) for c in cols)
+    return plan, targets
+
+
+def _spec_keys(spark: SparkSession, plan, spec: tuple) -> set:
+    """The distinct non-null keys a spec's dimension subtree yields, each
+    subtree run as a DataFrame whose columns are named ``_<exprId>``."""
+
+    def frame(path: tuple) -> DataFrame:
+        node = reduce(lambda n, i: n.children().apply(i), path, plan)
+        out = node.output()
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, node
+        )
+        names = (f"_{out.apply(i).exprId().id()}" for i in range(out.size()))
+        return DataFrame(jdf, spark).toDF(*names)
+
+    path, col, semi = spec
+    dim = frame(path)
+    for d_col, leaf_path, f_col in semi:
+        leaf = frame(leaf_path)
+        dim = dim.join(leaf, dim[f"_{d_col}"] == leaf[f"_{f_col}"], "left_semi")
+    rows = dim.select(f"_{col}").distinct().collect()
+    return {r[0] for r in rows if r[0] is not None}
+
+
+def _prune_keys(spark: SparkSession, plan, per_instance: tuple) -> list:
+    """The sorted union over instances of each instance's intersected key
+    sets."""
+    keys = set()
+    for specs in per_instance:
+        keys |= set.intersection(*(_spec_keys(spark, plan, s) for s in specs))
+    return sorted(keys)
 
 
 def _apply_fact_prunes(
-    spark: SparkSession, prunes: tuple
+    spark: SparkSession, name: str, targets: tuple
 ) -> dict[str, DataFrame]:
-    """Shadow each target view with the prune predicate(s); returns the
-    captured ORIGINAL DataFrames so the caller can restore the catalog
-    right after spark.sql has analyzed the query text."""
+    """Shadow each derived target view at or above the size gate with its
+    key predicate(s); returns the captured ORIGINAL DataFrames so the
+    caller can restore the catalog right after spark.sql has analyzed the
+    query text."""
     from pyspark.sql import functions as F
 
+    plan, views = targets
     preds: dict[str, list] = {}
-    for dim_sql, targets in prunes:
-        gated = [
-            (view, col)
-            for view, col in targets
-            if _view_bytes(spark, view) >= _PRUNE_MIN_FACT_BYTES
-        ]
-        if not gated:
+    for view, cols in views.items():
+        if _view_bytes(spark, view) < _PRUNE_MIN_FACT_BYTES:
             continue  # don't even collect the dimension keys
-        lo, hi, vals = _prune_keys(spark, dim_sql)
-        if vals is not None and len(vals) > _PRUNE_MAX_KEYS:
-            continue  # an In list this long costs more than it prunes
-        for view, col in gated:
-            if vals is None:
-                pred = F.col(col).between(F.lit(lo), F.lit(hi))
-            elif vals:
-                pred = F.col(col).isin(vals)
-            else:
-                # Empty dimension slice (tiny SFs): no fact row can match.
-                pred = F.lit(False)
-            preds.setdefault(view, []).append(pred)
+        for col, per_instance in cols:
+            vals = catalog_memo(spark, ("prune_keys", name, view, col),
+                                lambda: _prune_keys(spark, plan, per_instance))
+            # A contiguous key run (the date_dim surrogate keys are ordinal)
+            # becomes a range, which parquet row-group min/max stats can
+            # skip on; an empty one (tiny SFs) matches no fact row.
+            run = bool(vals) and vals[-1] - vals[0] + 1 == len(vals)
+            if not run and len(vals) > _PRUNE_MAX_KEYS:
+                continue  # an In list this long costs more than it prunes
+            preds.setdefault(view, []).append(
+                F.col(col).between(vals[0], vals[-1]) if run
+                else F.col(col).isin(vals) if vals else F.lit(False)
+            )
     restores: dict[str, DataFrame] = {}
     try:
         for view, plist in preds.items():
             orig = spark.table(view)
             restores[view] = orig
-            combined = plist[0]
-            for p in plist[1:]:
-                combined = combined & p
-            orig.filter(combined).createOrReplaceTempView(view)
+            orig.filter(reduce(operator.and_, plist)).createOrReplaceTempView(view)
     except BaseException:
         # A failure partway must not leave pruned shadows registered under
         # a valid catalog token: put back what was shadowed, and if even
@@ -5266,10 +5247,13 @@ def _register_tpcds_texts() -> None:
             spark: SparkSession, sf_dir: str, _text=text, _name=name
         ) -> DataFrame:
             register_tpcds_views(spark, sf_dir)
-            prunes = _FACT_PRUNES.get(_name)
-            if prunes is None:
+            if _name not in _FACT_PRUNES:
                 return spark.sql(_text)
-            restores = _apply_fact_prunes(spark, prunes)
+            targets = catalog_memo(
+                spark, ("fact_prunes", _name),
+                lambda: _derive_prunes(spark, spark.sql(_text)),
+            )
+            restores = _apply_fact_prunes(spark, _name, targets)
             try:
                 # spark.sql analyzes eagerly — the shadowed view plans are
                 # inlined into the returned Dataset here...

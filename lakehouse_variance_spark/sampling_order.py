@@ -15,26 +15,18 @@ scripts/driver_sim.py regardless, so nothing escapes re-checking).
 """
 
 SAMPLING_PRIORITY: tuple[str, ...] = (
-    'stream_sliding_window',
-    'stream_ewma_anomaly',
     'event_transition_counts',
+    'stream_ewma_anomaly',
+    'stream_sliding_window',
     'plan_feature_extract',
     'scheduler_experiment_summary',
-    'ssb_wl_35',
-    'ssb_wl_37',
-    'ssb_wl_47',
-    'ssb_wl_73',
-    'token_budget_select_global',
-    'ssb_wl_85',
-    'ssb_wl_89',
-    'ssb_wl_93',
     'ssb_wl_101',
     'ssb_wl_103',
     'ssb_wl_115',
     'ssb_wl_117',
+    'greedy_lowcarbon_schedule',
     'ssb_wl_127',
     'ssb_wl_129',
-    'multimodal_metadata',
     'ssb_wl_137',
     'ssb_wl_151',
     'ssb_wl_163',
@@ -42,20 +34,17 @@ SAMPLING_PRIORITY: tuple[str, ...] = (
     'ssb_wl_169',
     'ssb_wl_185',
     'ssb_wl_197',
+    'hll_intersect_estimate',
+    'ssb_wl_35',
+    'ssb_wl_37',
+    'ssb_wl_47',
+    'ssb_wl_73',
+    'ssb_wl_85',
+    'ssb_wl_89',
+    'ssb_wl_93',
     'tpcds_wl_1',
-    'tpcds_wl_81',
-    'media_frame_sample',
-    'tpcds_wl_181',
-    'tpcds_wl_281',
-    'tpcds_wl_321',
-    'tpcds_wl_381',
-    'tpcds_wl_421',
-    'tpcds_wl_521',
-    'tpcds_wl_601',
-    'tpcds_wl_861',
-    'tpcds_wl_961',
-    'media_feature_extract',
     'tpcds_wl_1021',
+    'imdb_lwl_127',
     'tpcds_wl_1041',
     'tpcds_wl_1201',
     'tpcds_wl_1221',
@@ -64,7 +53,8 @@ SAMPLING_PRIORITY: tuple[str, ...] = (
     'tpcds_wl_1461',
     'tpcds_wl_1541',
     'tpcds_wl_1761',
-    'media_resize',
+    'tpcds_wl_181',
+    'imdb_lwl_262',
     'tpcds_wl_2021',
     'tpcds_wl_2101',
     'tpcds_wl_2201',
@@ -74,6 +64,16 @@ SAMPLING_PRIORITY: tuple[str, ...] = (
     'tpcds_wl_2621',
     'tpcds_wl_2741',
     'tpcds_wl_2761',
-    'merge_upsert_orders',
+    'imdb_lwl_271',
+    'tpcds_wl_281',
     'tpcds_wl_2921',
+    'tpcds_wl_321',
+    'tpcds_wl_381',
+    'tpcds_wl_421',
+    'tpcds_wl_521',
+    'tpcds_wl_601',
+    'tpcds_wl_81',
+    'tpcds_wl_861',
+    'imdb_lwl_280',
+    'tpcds_wl_961',
 )

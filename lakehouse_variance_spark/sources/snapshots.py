@@ -426,11 +426,11 @@ def _publish(
     extra: dict | None = None,
 ) -> int:
     """Shared commit body: write ``new``'s rows (when given) under a fresh
-    commit dir and read their footer stats, publish a manifest listing
-    ``base``'s files, stats and pending deletes plus the new files, and
-    advance ``ref``. Every commit path funnels through here so fixes land
-    once. Pending deletes name files by base name, so a name may appear
-    once per manifest."""
+    commit dir, read their footer stats and delete the files with no rows,
+    publish a manifest listing ``base``'s files, stats and pending deletes
+    plus the new files, and advance ``ref``. Every commit path funnels
+    through here so fixes land once. Pending deletes name files by base
+    name, so a name may appear once per manifest."""
     version = current_version(table_dir) + 1
     commit_id = uuid.uuid4().hex
     files = list(base["files"])
@@ -438,9 +438,13 @@ def _publish(
     if new is not None:
         data_dir = Path(table_dir) / "data" / f"c{version}-{commit_id[:8]}"
         new.write.mode("error").parquet(str(data_dir))
-        added = sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file())
-        files += added
-        stats.update((f, _footer_stats(f)) for f in added)
+        for f in sorted(str(p) for p in data_dir.glob("*.parquet") if p.is_file()):
+            fs = _footer_stats(f)
+            if fs["rows"]:
+                files.append(f)
+                stats[f] = fs
+            else:  # an empty write task's file: unlisted, so no scan opens it
+                os.unlink(f)
     names = [os.path.basename(f) for f in files]
     if len(set(names)) != len(names):
         raise RuntimeError(f"v{version}: a data file name repeats in the manifest")
@@ -752,7 +756,7 @@ _BOUNDED = _INTEGRAL | {"string", "date", "boolean"}
 _ANY = {True, False, None}
 
 
-def _tree(nodes: list[dict]) -> tuple:
+def catalyst_tree(nodes: list[dict]) -> tuple:
     """Catalyst's pre-order JSON node list as ``(kind, node, children)``."""
     it = iter(nodes)
 
@@ -861,9 +865,9 @@ def _conjunct(expr: tuple, stats: dict) -> set:
     return out | {v for v, can in ((True, true), (False, false)) if can}
 
 
-def _conjuncts(cond: tuple) -> list[tuple]:
+def conjuncts(cond: tuple) -> list[tuple]:
     kind, _, kids = cond
-    return [c for k in kids for c in _conjuncts(k)] if kind == "And" else [cond]
+    return [c for k in kids for c in conjuncts(k)] if kind == "And" else [cond]
 
 
 def _delete_action(cond: tuple | None, stats: dict) -> str:
@@ -874,7 +878,7 @@ def _delete_action(cond: tuple | None, stats: dict) -> str:
     if stats["rows"] == 0:
         return "keep"
     try:
-        truths = [_conjunct(c, stats) for c in _conjuncts(cond)] if cond else []
+        truths = [_conjunct(c, stats) for c in conjuncts(cond)] if cond else []
     except (TypeError, ValueError):  # bounds that do not compare
         return "cover"
     if any(True not in t for t in truths):
@@ -942,7 +946,7 @@ def delete_from_snapshot(
         return parent  # the predicate folded to FALSE or NULL
     cond, where = None, "true"  # a bare relation: it folded to TRUE
     if kind == "Filter":
-        cond = _tree(json.loads(plan.condition().toJSON()))
+        cond = catalyst_tree(json.loads(plan.condition().toJSON()))
         where = plan.condition().sql()
     jvm = spark.sparkContext._jvm
     to_type = jvm.org.apache.spark.sql.types.DataType.fromJson

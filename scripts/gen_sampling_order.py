@@ -49,10 +49,10 @@ def _contract_priority(name: str) -> tuple:
 
     tpcds_q1..q99 (the verbatim texts SURVEY.md calls "the contract we
     must satisfy"), then tpch_q*, then the never-fired survey-row ops
-    (stream_* + scheduling/trace), then everything else in registration
-    order, with generated ``*_wl_*`` texts last.  Sort is stable, so
-    within each tier registration order is preserved (except tpcds/tpch,
-    which get explicit numeric order).
+    (stream_* + scheduling/trace), then everything else, with generated
+    ``*_wl_*`` texts last.  tpcds/tpch get explicit numeric order; the
+    caller breaks every other tie by name, so the order never depends on
+    the order in which query modules were imported.
     """
     m = _TPCDS_Q.match(name)
     if m:
@@ -91,15 +91,15 @@ def priority_order() -> list[str]:
         if n not in certified
         and not (n in no_oracle_seen and n not in registry.ORACLES)
     ]
-    fresh.sort(key=_contract_priority)
+    fresh.sort(key=lambda n: (_contract_priority(n), n))
     # Interleave 1 already-certified query per 9 fresh ones (ADVICE r7):
     # a prefix-sampling driver then re-checks ~10% previously certified
     # queries each round, so a regression in certified code does not rely
     # solely on the internal oracle gate. The re-check rotation is a
-    # deterministic function of committed inputs: certified queries in
-    # registration order, offset by the number of CORRECTNESS rounds seen.
+    # deterministic function of committed inputs: certified queries by
+    # name, offset by the number of CORRECTNESS rounds seen.
     n_rounds = len(glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json")))
-    recheck_pool = [n for n in registry.QUERIES if n in certified]
+    recheck_pool = sorted(n for n in registry.QUERIES if n in certified)
     order: list[str] = []
     inserted: set[str] = set()
     ri = 0

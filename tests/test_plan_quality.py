@@ -335,6 +335,13 @@ def test_fact_prunes_reach_scans_and_restore_catalog(spark, monkeypatch):
     assert full == again, "fact prune leaked past its query"
 
 
+def _derived(spark, name: str) -> tuple:
+    """The prune targets derived from ``name``'s pure text."""
+    return tpcds_texts._derive_prunes(
+        spark, spark.sql(tpcds_texts.TPCDS_TEXTS[name])
+    )
+
+
 def test_fact_prune_failure_restores_shadowed_views(spark, monkeypatch):
     """A failure while shadowing the SECOND fact view must put the first
     one back before re-raising: the catalog token still reads valid, so a
@@ -346,14 +353,14 @@ def test_fact_prune_failure_restores_shadowed_views(spark, monkeypatch):
 
     monkeypatch.setattr(tpcds_texts, "_PRUNE_MIN_FACT_BYTES", 0)
     register_tpcds_views(spark, SF_DIR)
-    prunes = tpcds_texts._FACT_PRUNES["tpcds_q4"]
-    (first, _), (second, _) = prunes[0][1][:2]
+    targets = _derived(spark, "tpcds_q4")
+    first, second = list(targets[1])[:2]
 
     def rows():
         return spark.table(first).count()
 
     full = rows()
-    restores = tpcds_texts._apply_fact_prunes(spark, prunes)
+    restores = tpcds_texts._apply_fact_prunes(spark, "tpcds_q4", targets)
     pruned = rows()
     tpcds_texts._restore_views(restores)
     assert pruned < full, "the prune must drop rows for this check to bite"
@@ -367,9 +374,63 @@ def test_fact_prune_failure_restores_shadowed_views(spark, monkeypatch):
 
     monkeypatch.setattr(spark, "table", failing_table)
     with pytest.raises(RuntimeError, match="injected"):
-        tpcds_texts._apply_fact_prunes(spark, prunes)
+        tpcds_texts._apply_fact_prunes(spark, "tpcds_q4", targets)
     monkeypatch.setattr(spark, "table", table)
     assert rows() == full, "first view left pruned after the failure"
+
+
+def test_q72_outer_join_returns_are_never_shadowed(spark, monkeypatch):
+    """q72's catalog_returns is the null-supplying side of a LEFT OUTER
+    JOIN: no key may reach it, even with the size gate at 0, while the
+    inventory it is read beside is pruned."""
+    from lakehouse_variance_spark.plans.tpcds_schema import (
+        register_tpcds_views,
+    )
+
+    monkeypatch.setattr(tpcds_texts, "_PRUNE_MIN_FACT_BYTES", 0)
+    register_tpcds_views(spark, SF_DIR)
+    _, views = _derived(spark, "tpcds_q72")
+    assert "catalog_returns" not in views
+    shadowed = []
+    apply = tpcds_texts._apply_fact_prunes
+
+    def spy(spark_, name, targets):
+        restores = apply(spark_, name, targets)
+        shadowed.extend(restores)
+        return restores
+
+    monkeypatch.setattr(tpcds_texts, "_apply_fact_prunes", spy)
+    registry.QUERIES["tpcds_q72"](spark, SF_DIR)
+    assert "inventory" in shadowed
+    assert "catalog_returns" not in shadowed
+
+
+def test_fact_prune_derivation_is_memoized_per_catalog_token(
+    spark, monkeypatch
+):
+    """A second tpcds_q4 call under the same catalog token reuses the
+    derived targets: the plan walk runs once."""
+    from lakehouse_variance_spark.memo import session_state
+    from lakehouse_variance_spark.plans.synth_common import catalog_state_get
+    from lakehouse_variance_spark.plans.tpcds_schema import (
+        register_tpcds_views,
+    )
+
+    register_tpcds_views(spark, SF_DIR)
+    token = catalog_state_get(spark)
+    session_state(spark).pop((token, ("fact_prunes", "tpcds_q4")), None)
+    calls = []
+    derive = tpcds_texts._derive_prunes
+
+    def spy(spark_, pure):
+        calls.append(pure)
+        return derive(spark_, pure)
+
+    monkeypatch.setattr(tpcds_texts, "_derive_prunes", spy)
+    registry.QUERIES["tpcds_q4"](spark, SF_DIR)
+    registry.QUERIES["tpcds_q4"](spark, SF_DIR)
+    assert catalog_state_get(spark) == token
+    assert len(calls) == 1
 
 
 def test_view_bytes_does_not_memoize_failed_estimate(spark, monkeypatch):
@@ -438,8 +499,8 @@ def test_fact_prune_returns_the_pure_texts_rows(
     shadowed = []
     apply = tpcds_texts._apply_fact_prunes
 
-    def spy(spark_, prunes):
-        restores = apply(spark_, prunes)
+    def spy(spark_, name_, targets):
+        restores = apply(spark_, name_, targets)
         shadowed.extend(restores)
         return restores
 
@@ -447,38 +508,57 @@ def test_fact_prune_returns_the_pure_texts_rows(
     pruned = _canon_rows(registry.QUERIES[name](spark, sf_dir))
     assert shadowed, f"{name}: no fact view was pruned"
     if name == "tpcds_q37" and sf_dir == SF_DIR:
+        plan, views = _derived(spark, name)
         keys = [
-            tpcds_texts._prune_keys(spark, dim_sql)
-            for dim_sql, _ in tpcds_texts._FACT_PRUNES[name]
+            tpcds_texts._prune_keys(spark, plan, per_instance)
+            for cols in views.values()
+            for _, per_instance in cols
         ]
-        assert (None, None, []) in keys
+        assert [] in keys
     assert pruned == pure
 
 
+# The (view, column) pairs each query's prune covered when its dimension
+# predicates were copied by hand from the text; the derived targets must
+# still cover every one.
+_HAND_WRITTEN_TARGETS = {
+    "tpcds_q4": (("store_sales", "ss_sold_date_sk"),
+                 ("catalog_sales", "cs_sold_date_sk"),
+                 ("web_sales", "ws_sold_date_sk")),
+    "tpcds_q22": (("inventory", "inv_date_sk"),),
+    "tpcds_q37": (("inventory", "inv_date_sk"), ("inventory", "inv_item_sk"),
+                  ("catalog_sales", "cs_item_sk")),
+    "tpcds_q39": (("inventory", "inv_date_sk"),),
+    "tpcds_q51": (("web_sales", "ws_sold_date_sk"),
+                  ("store_sales", "ss_sold_date_sk")),
+    "tpcds_q64": (("store_sales", "ss_item_sk"),
+                  ("store_returns", "sr_item_sk"),
+                  ("catalog_sales", "cs_item_sk"),
+                  ("catalog_returns", "cr_item_sk"),
+                  ("store_sales", "ss_sold_date_sk")),
+    "tpcds_q67": (("store_sales", "ss_sold_date_sk"),),
+    "tpcds_q72": (("inventory", "inv_date_sk"),),
+    "tpcds_q78": (("web_sales", "ws_sold_date_sk"),
+                  ("catalog_sales", "cs_sold_date_sk"),
+                  ("store_sales", "ss_sold_date_sk")),
+    "tpcds_q82": (("inventory", "inv_date_sk"), ("inventory", "inv_item_sk"),
+                  ("store_sales", "ss_item_sk")),
+}
+
+
 @pytest.mark.parametrize("name", sorted(tpcds_texts._FACT_PRUNES))
-def test_fact_prune_predicates_come_from_the_text(name):
-    """Each prune's dimension predicate is copied by hand from the verbatim
-    text. Every literal and column it filters on must appear in
-    TPCDS_TEXTS[name], so a re-drawn text (new years, colors, price
-    bands) fails here instead of silently over- or under-pruning."""
-    text = tpcds_texts.TPCDS_TEXTS[name]
-    for dim_sql, _ in tpcds_texts._FACT_PRUNES[name]:
-        where = dim_sql.split(" WHERE ", 1)[1]
-        strings = re.findall(r"'[^']*'", where)
-        bare = re.sub(r"'[^']*'", " ", where)
-        numbers = re.findall(r"(?<![\w.])\d+(?:\.\d+)?(?![\w.])", bare)
-        columns = re.findall(r"\b[a-z]+_[a-z_]+\b", bare)
-        assert strings or numbers, dim_sql
-        for lit in strings:
-            assert lit in text, f"{name}: {lit} of {dim_sql!r} not in text"
-        for lit in numbers:
-            assert re.search(rf"(?<![\w.]){re.escape(lit)}(?![\w.])", text), (
-                f"{name}: {lit} of {dim_sql!r} not in text"
-            )
-        for col in columns:
-            assert re.search(rf"\b{col}\b", text), (
-                f"{name}: {col} of {dim_sql!r} not in text"
-            )
+def test_fact_prune_predicates_come_from_the_text(spark, name):
+    """Each prune is derived from the text's own optimized plan: the
+    derived (view, column) targets cover every pair the hand-copied
+    predicates used to, so a re-drawn text moves its prune with it."""
+    from lakehouse_variance_spark.plans.tpcds_schema import (
+        register_tpcds_views,
+    )
+
+    register_tpcds_views(spark, SF_DIR)
+    _, views = _derived(spark, name)
+    derived = {(view, col) for view, cols in views.items() for col, _ in cols}
+    assert set(_HAND_WRITTEN_TARGETS[name]) <= derived
 
 
 def test_ssb_flights_broadcast_all_dimensions(spark):

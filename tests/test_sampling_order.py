@@ -3,9 +3,7 @@ the committed CORRECTNESS records and the registry."""
 
 from __future__ import annotations
 
-import json
-import subprocess
-import sys
+import runpy
 from pathlib import Path
 
 from lakehouse_variance_spark.sampling_order import SAMPLING_PRIORITY
@@ -14,17 +12,9 @@ ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_committed_sampling_priority_is_the_generators_output():
-    # A fresh interpreter, as the script runs: the registry's order is
-    # its import order, which earlier tests in this process have changed.
-    code = (
-        "import json, runpy; "
-        "gen = runpy.run_path('scripts/gen_sampling_order.py'); "
-        "print(json.dumps(gen['priority_order']()))"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code], cwd=ROOT, capture_output=True,
-        text=True, check=True,
-    )
-    assert list(SAMPLING_PRIORITY) == json.loads(out.stdout.splitlines()[-1]), (
+    # In-process: the generator orders ties by name, so the modules this
+    # process has already imported do not change its output.
+    gen = runpy.run_path(str(ROOT / "scripts" / "gen_sampling_order.py"))
+    assert list(SAMPLING_PRIORITY) == gen["priority_order"](), (
         "sampling_order.py is stale: run scripts/gen_sampling_order.py"
     )

@@ -20,7 +20,7 @@ from tests.conftest import SF_DIR
 
 
 def test_env_int_parses_and_names_bad_values(monkeypatch):
-    name = "SPARK_GRAFT_PRUNE_MAX_KEYS"
+    name = "SPARK_GRAFT_CPUS"
     monkeypatch.delenv(name, raising=False)
     assert env_int(name, 4096) == 4096
     monkeypatch.setenv(name, "")
@@ -60,10 +60,6 @@ def test_defaults_come_from_the_host():
     "module, var",
     [
         ("lakehouse_variance_spark.session", "SPARK_GRAFT_CPUS"),
-        ("lakehouse_variance_spark.plans.tpcds_texts",
-         "SPARK_GRAFT_PRUNE_MIN_BYTES"),
-        ("lakehouse_variance_spark.plans.tpcds_texts",
-         "SPARK_GRAFT_PRUNE_MAX_KEYS"),
     ],
 )
 def test_bad_env_value_fails_import_naming_it(module, var):

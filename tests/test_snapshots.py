@@ -507,13 +507,23 @@ def _nullable(t):
 
 
 def _assert_schema_parity(spark, t, v):
-    """The manifest's schema must be what parquet's mergeSchema would
-    infer over the files that version lists."""
+    """A write's manifest schema must be what parquet's mergeSchema would
+    infer over the files that version lists. A delete, optimize or
+    rollback keeps the schema of the version it starts from: it only
+    drops or re-points files, and the files left need not hold every
+    column (a whole-file delete can drop the only file that added one)."""
     from lakehouse_variance_spark.sources import snapshots as snap
 
-    files = snap._read_manifest(t, v)["files"]
-    inferred = spark.read.option("mergeSchema", "true").parquet(*files).schema
+    manifest = snap._read_manifest(t, v)
+    op = manifest["operation"]
     got = read_snapshot(spark, t, v).schema
+    if op.startswith(("delete-where", "optimize", "rollback->")):
+        source = (int(op.split("->")[1]) if op.startswith("rollback")
+                  else manifest["parent"])
+        assert got == read_snapshot(spark, t, source).schema, f"v{v}"
+        return
+    files = manifest["files"]
+    inferred = spark.read.option("mergeSchema", "true").parquet(*files).schema
     assert _nullable(got) == _nullable(inferred), f"v{v}"
 
 
@@ -899,3 +909,36 @@ def test_merge_on_read_matches_row_model(spark, tmp_path, seed):
         snap.delete_from_snapshot(spark, t, "nope = 1")
     assert current_version(t) == gone and snap._main_head(t) == gone
     commit(snap.optimize_snapshot(spark, t), [], cols[gone])
+
+
+def test_commit_drops_empty_data_files(spark, tmp_path):
+    """Spark's first write task writes a file even when it has no rows
+    (here: a slice whose keys all sit in later partitions). The commit
+    deletes such a file instead of listing it, so no scan opens it; an
+    overwrite with no rows at all leaves an empty table."""
+    import os
+
+    from lakehouse_variance_spark.sources import snapshots as snap
+
+    t = str(tmp_path / "t")
+    rows = spark.range(0, 40, 1, 4)
+    snap.write_snapshot(rows.where("id < 10"), t, "append")
+    v = snap.write_snapshot(rows.where("id >= 10"), t, "append")
+    manifest = snap._read_manifest(t, v)
+    assert [s["rows"] for s in manifest["file_stats"].values()].count(0) == 0
+    assert sorted(s["rows"] for s in manifest["file_stats"].values()) == [
+        10, 10, 10, 10
+    ]
+    on_disk = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(os.path.join(t, "data"))
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    assert sorted(on_disk) == sorted(manifest["files"])
+    assert read_snapshot(spark, t).count() == 40
+
+    v = snap.write_snapshot(rows.where("id < 0"), t, "overwrite")
+    assert snap._read_manifest(t, v)["files"] == []
+    empty = read_snapshot(spark, t)
+    assert empty.columns == ["id"] and empty.count() == 0
