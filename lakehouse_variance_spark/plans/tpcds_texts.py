@@ -5000,10 +5000,10 @@ LIMIT 100
 # optimized plan implies:
 # * a fact column equi-joined (inner or left semi) to a filtered, fact-free
 #   dimension subtree takes that subtree's distinct join keys;
-# * keys carry across equi-join equivalence classes (q64's sr_item_sk and
-#   cr_item_sk via ss_item_sk/cs_item_sk = i_item_sk), projections, grouping
-#   and window-partition keys, but not across a limit, expand or union, nor
-#   into the null-supplying side of an outer join;
+# * keys carry across inner equi-join equivalence classes (q64's sr_item_sk
+#   and cr_item_sk via ss_item_sk/cs_item_sk = i_item_sk), filters,
+#   projections and grouping keys; any other operator, and the
+#   null-supplying side of a left outer join, stops them;
 # * an unfiltered dimension side is first semi-joined, on the join's other
 #   equi-conjuncts, with the filtered fact-free subtrees they reference
 #   (q72: inv_date_sk = d2.d_date_sk AND d1.d_week_seq = d2.d_week_seq);
@@ -5043,11 +5043,6 @@ def _view_bytes(spark: SparkSession, view: str) -> int:
         return 1 << 62
 
 
-# Operators that pass each child row through unchanged or drop it whole.
-_ROW_LOCAL = {"Project", "Filter", "Sort", "Repartition",
-              "RepartitionByExpression", "RebalancePartitions"}
-
-
 class _KeyClass:
     """Union-find class of equi-joined columns and the specs bounding it."""
 
@@ -5075,23 +5070,22 @@ def _walk(plan: tuple, fact_of: dict, instances: dict, path: tuple = ()):
         if cols[0]["name"] in fact_of:
             instances.setdefault(fact_of[cols[0]["name"]], []).append(inst)
             side.facts = True
-    elif kind in _ROW_LOCAL:
+    elif kind in ("Project", "Filter"):
         side.classes = dict(child)
         side.selective |= kind == "Filter" and any(
             c[0] != "IsNotNull" for c in conjuncts(catalyst_tree(node["condition"]))
         )
-    elif kind in ("Aggregate", "Window", "WindowGroupLimit"):
-        keys = node.get("groupingExpressions", node.get("partitionSpec"))
+    elif kind == "Aggregate":
+        keys = node["groupingExpressions"]
         kept = {e[0]["exprId"]["id"] for e in keys if "exprId" in e[0]}
         side.classes = {i: c for i, c in child.items() if i in kept}
     elif kind == "Join":
-        jt = node["joinType"]
-        join = (jt.get("object") or jt["product-class"]).split(".")[-1].rstrip("$")
-        if join in ("Inner", "Cross", "LeftSemi"):
+        join = node["joinType"].get("object", "").split(".")[-1]
+        if join in ("Inner$", "LeftSemi$"):
             side.classes = {**sides[0].classes, **sides[1].classes}
             _join(side, node.get("condition"))
-        elif join in ("LeftOuter", "LeftAnti", "ExistenceJoin", "RightOuter"):
-            side.classes = dict(sides[join == "RightOuter"].classes)
+        elif join == "LeftOuter$":
+            side.classes = dict(sides[0].classes)
     for expr in node.get("projectList") or node.get("aggregateExpressions") or []:
         e_kind, alias, e_kids = catalyst_tree(expr)  # `column AS name`
         if e_kind == "Alias" and e_kids[0][0] == "AttributeReference":

@@ -414,6 +414,14 @@ def _carry(manifest: dict) -> dict:
 _NOTHING = {"files": [], "file_stats": {}, "deletes": []}
 
 
+def _unlink_data(path: str | Path) -> None:
+    """Delete a data file and the ``.<name>.crc`` checksum that Hadoop's
+    local writer leaves beside it."""
+    p = Path(path)
+    p.unlink()
+    p.with_name(f".{p.name}.crc").unlink(missing_ok=True)
+
+
 def _publish(
     table_dir: str,
     *,
@@ -444,7 +452,7 @@ def _publish(
                 files.append(f)
                 stats[f] = fs
             else:  # an empty write task's file: unlisted, so no scan opens it
-                os.unlink(f)
+                _unlink_data(f)
     names = [os.path.basename(f) for f in files]
     if len(set(names)) != len(names):
         raise RuntimeError(f"v{version}: a data file name repeats in the manifest")
@@ -621,7 +629,7 @@ def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[str]:
     for f in sorted(doomed - live):
         p = Path(f)
         if p.exists():
-            p.unlink()
+            _unlink_data(p)
             deleted.append(f)
     return deleted
 
@@ -1109,7 +1117,7 @@ def remove_orphan_files(
     if data_root.exists():
         for p in sorted(data_root.rglob("*.parquet")):
             if str(p) not in referenced and p.stat().st_mtime <= cutoff:
-                p.unlink()
+                _unlink_data(p)
                 deleted.append(str(p))
     return deleted
 

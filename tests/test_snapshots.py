@@ -4,6 +4,8 @@ metadata-only planning (the manifest schema; job ceilings)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -104,6 +106,16 @@ def test_snapshot_concurrent_commit_detected(spark, tmp_path):
     )
 
 
+def _lone_checksums(table_dir) -> list[str]:
+    """The ``.<name>.crc`` files under a table's data dir whose data file
+    is gone."""
+    data = Path(table_dir) / "data"
+    return sorted(
+        str(c) for c in data.rglob(".*.crc")
+        if not c.with_name(c.name[1:-len(".crc")]).exists()
+    )
+
+
 def test_expire_snapshots_keeps_live_files(spark, tmp_path):
     tbl = str(tmp_path / "tbl")
     orders = _orders(spark)
@@ -113,6 +125,7 @@ def test_expire_snapshots_keeps_live_files(spark, tmp_path):
 
     deleted = expire_snapshots(tbl, keep_last=2)
     assert deleted, "v1's files were only referenced by v1"
+    assert _lone_checksums(tbl) == []
     # live versions unaffected
     assert read_snapshot(spark, tbl, 2).count() == 60
     assert read_snapshot(spark, tbl, 3).count() == 70
@@ -353,6 +366,7 @@ def test_remove_orphan_files_only_touches_unreferenced(spark, tmp_path):
     assert snap.remove_orphan_files(t) == []
     deleted = snap.remove_orphan_files(t, older_than_seconds=0)
     assert deleted and all("c99-deadbeef" in f for f in deleted)
+    assert _lone_checksums(t) == []
     assert read_snapshot(spark, t).count() == 12
     assert read_snapshot(spark, t, 1).count() == 5
     # second run is a no-op
@@ -506,25 +520,43 @@ def _nullable(t):
     return t
 
 
-def _assert_schema_parity(spark, t, v):
-    """A write's manifest schema must be what parquet's mergeSchema would
-    infer over the files that version lists. A delete, optimize or
-    rollback keeps the schema of the version it starts from: it only
-    drops or re-points files, and the files left need not hold every
-    column (a whole-file delete can drop the only file that added one)."""
+def _within(inner, outer) -> bool:
+    """Every field of struct ``inner`` is in ``outer`` with the same type,
+    nested structs compared field by field."""
+    types = {f.name: f.dataType for f in outer.fields}
+    return all(
+        f.name in types and (
+            _within(f.dataType, types[f.name])
+            if isinstance(f.dataType, StructType)
+            and isinstance(types[f.name], StructType)
+            else f.dataType == types[f.name]
+        )
+        for f in inner.fields
+    )
+
+
+def _assert_schema_parity(spark, t, v) -> bool:
+    """The manifest's schema must be what parquet's mergeSchema would
+    infer over the files that version lists. The one exception is a
+    delete that writes no file: it keeps its parent's schema, and since
+    it can drop the only file that carried a field, the files it keeps
+    may infer a part of that schema. Returns whether they do."""
     from lakehouse_variance_spark.sources import snapshots as snap
 
     manifest = snap._read_manifest(t, v)
-    op = manifest["operation"]
-    got = read_snapshot(spark, t, v).schema
-    if op.startswith(("delete-where", "optimize", "rollback->")):
-        source = (int(op.split("->")[1]) if op.startswith("rollback")
-                  else manifest["parent"])
-        assert got == read_snapshot(spark, t, source).schema, f"v{v}"
-        return
     files = manifest["files"]
-    inferred = spark.read.option("mergeSchema", "true").parquet(*files).schema
-    assert _nullable(got) == _nullable(inferred), f"v{v}"
+    got = _nullable(read_snapshot(spark, t, v).schema)
+    inferred = _nullable(
+        spark.read.option("mergeSchema", "true").parquet(*files).schema
+    )
+    if got == inferred:
+        return False
+    parent = manifest["parent"]
+    assert manifest["operation"].startswith("delete-where"), f"v{v}"
+    assert set(files) <= set(snap._read_manifest(t, parent)["files"]), f"v{v}"
+    assert got == _nullable(read_snapshot(spark, t, parent).schema), f"v{v}"
+    assert _within(inferred, got), f"v{v}"
+    return True
 
 
 def _commit_every_path(spark, tmp_path) -> list[tuple[str, list[int]]]:
@@ -579,10 +611,17 @@ def test_manifest_schema_matches_merge_inference_on_every_commit(
     spark, tmp_path
 ):
     """Every commit path records the schema a mergeSchema read of its
-    files would infer."""
-    for t, versions in _commit_every_path(spark, tmp_path):
-        for v in versions:
-            _assert_schema_parity(spark, t, v)
+    files would infer, except a delete that writes no file. Here that is
+    the merge-on-read ``c = 'x'`` delete, which drops the one file that
+    carries ``s.y``, and the copy-on-write ``LIKE`` delete after it,
+    whose rewrite has no surviving rows. Both keep the parent's schema."""
+    tables = _commit_every_path(spark, tmp_path)
+    narrowed = [
+        (t, v) for t, versions in tables for v in versions
+        if _assert_schema_parity(spark, t, v)
+    ]
+    t, versions = tables[0]
+    assert narrowed == [(t, versions[4]), (t, versions[5])]
 
 
 def test_manifest_stats_match_footers_on_every_commit(spark, tmp_path):
@@ -936,6 +975,7 @@ def test_commit_drops_empty_data_files(spark, tmp_path):
         if f.endswith(".parquet")
     ]
     assert sorted(on_disk) == sorted(manifest["files"])
+    assert _lone_checksums(t) == []
     assert read_snapshot(spark, t).count() == 40
 
     v = snap.write_snapshot(rows.where("id < 0"), t, "overwrite")
